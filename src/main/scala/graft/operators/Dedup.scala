@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{GraftFunctions, stf}
+import graft.plans.Probe
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -35,42 +36,19 @@ object Dedup {
    * buckets, O(n²) refines). A small parquet file arrives as ONE scan
    * partition (row-group granularity), which would run the whole kernel
    * single-threaded; the repartition moves only the raw input rows — cheap
-   * exactly when it fires.
-   *
-   * The partition count is inspected WITHOUT executing anything: only
-   * exchange-free single-leaf plans (scan → project/filter chains) are
-   * considered — their leaf partition count is known at planning time.
-   * Anything with an upstream shuffle already carries
-   * `spark.sql.shuffle.partitions` and is left alone; critically, probing
-   * such a plan via `df.rdd` would force AQE to materialize every upstream
-   * stage just to learn the count, and the returned plan would then run
-   * them all a second time.
+   * exactly when it fires. The decision is [[graft.plans.Probe.spreadWidth]]:
+   * exchange-free plans whose leaves sum to fewer partitions than
+   * `defaultParallelism`, inspected without executing anything. Anything
+   * with an upstream shuffle already carries `spark.sql.shuffle.partitions`
+   * and is left alone; probing such a plan via `df.rdd` would force AQE to
+   * materialize every upstream stage just to learn the count.
    */
-  private[graft] def spread(df: DataFrame): DataFrame = {
+  private[graft] def spread(df: DataFrame): DataFrame =
     // a streaming frame cannot be batch-planned (and its micro-batch
     // partitioning is the source's business) — pass it through untouched
-    if (df.isStreaming) return df
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val plan = df.queryExecution.sparkPlan
-    // any number of leaves (r15): a UNION of narrow scan legs is still
-    // exchange-free and its partitioning is the concatenation of the legs,
-    // so the input partition count is the SUM of the leaf counts — the
-    // single-leaf-only rule left q234's (odd ∪ perturbed) probe batch at
-    // 2 partitions, which serialized the whole fused gate pipeline into
-    // 2 tasks at sf1 (~100M dot products, 22.1 s vs 9.9 s baseline).
-    val leafParts = plan.collectLeaves() match {
-      case leaves if leaves.nonEmpty && plan.find(
-          _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]).isEmpty =>
-        // leaf execute() builds the scan RDD lazily — no job is submitted
-        try Some(leaves.map(_.execute().getNumPartitions).sum)
-        catch { case _: Throwable => None }
-      case _ => None
-    }
-    leafParts match {
-      case Some(n) if n < par => df.repartition(par)
-      case _ => df
-    }
-  }
+    if (df.isStreaming) df
+    else Probe.spreadWidth(df.sparkSession, df.queryExecution.analyzed)
+      .fold(df)(n => df.repartition(n))
 
   /**
    * Free the executor blocks behind an eagerly localCheckpoint-ed

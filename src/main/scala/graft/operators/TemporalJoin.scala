@@ -79,11 +79,9 @@ object TemporalJoin {
     // the JOINED frame, so a user column of either name on either side
     // would be silently deleted
     requireFree(left, "__tb_l", "__tb_r"); requireFree(right, "__tb_l", "__tb_r")
-    // spread under-partitioned inputs before the bucket explode (r15):
-    // when one side broadcasts, the other side's explode+join+refine
-    // fuses into one codegen stage at the raw scan's task count (q42 at
-    // sf1: 1-3 runnable tasks, 8c/32c ratio ≈ 1.0). Dedup.spread no-ops
-    // for already-shuffled or wide-enough inputs.
+    // spread under-partitioned inputs before the bucket explode: when one
+    // side broadcasts, the other side's explode+join+refine fuses into one
+    // stage at the raw scan's task count
     val l = Dedup.spread(left).withColumn("__tb_l",
       explode(sequence(bucketOf(lStart, bucketR), bucketOf(lEnd, bucketR))))
     val r = Dedup.spread(right).withColumn("__tb_r",

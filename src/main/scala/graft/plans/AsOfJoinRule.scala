@@ -100,16 +100,16 @@ object AsOfJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     * most of the data serializes into ONE task — the typed
     * [[graft.operators.TemporalJoin.asOfKeyed]] (range-partitioned
     * timeline) is the skew-proof path. Before rewriting, both join
-    * children are probed with a bounded deterministic sample
-    * ([[RangeJoinRule]]'s auto-bucket machinery pattern); if a single
+    * children are probed with a bounded deterministic sample; if a single
     * key tuple holds more than `spark.graft.join.asofMaxKeyShare`
     * (default 0.9) of a large-enough combined sample, the rewrite
     * DECLINES with a pointer to the typed kernel — Spark's own
     * join+window plan runs (which at that skew is also poor, but is
     * what the user wrote). `>= 1` disables the gate; the probe costs
-    * two ≤2048-row jobs at plan time (a limit over a scan reads one
-    * partition at any input size). Best-effort by design: a false
-    * negative just keeps today's behavior, never changes results. */
+    * one ≤2048-row job per side not yet sampled (a limit over a scan
+    * reads one partition at any input size; see [[Probe.sample]]).
+    * Best-effort by design: a skipped or failed probe just keeps the
+    * rewrite, never changes results. */
   private val HotKeySampleRows = 2048
   private val HotKeyMinSample = 512
 
@@ -122,72 +122,30 @@ object AsOfJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** Re-entrancy guard: the probe's own queries pass through the
-    * optimizer and must not recursively probe. */
-  private val inSampling = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = false
-  }
-
-  /** Probe-verdict memo (r15, guide §1.2 — compute once): the verdict is
-    * a pure function of (canonicalized children, keys, threshold), but a
-    * query is planned repeatedly (explain + execute, re-runs of the same
-    * statement), and each planning pass re-ran the two sample jobs —
-    * ~0.2 s of plan-time per pass that regressed q240 0.39→0.61 s when
-    * the gate landed (r14 verdict). Keyed on semantic hashes; a collision
-    * merely swaps which of two RESULT-IDENTICAL plans runs (the probe is
-    * best-effort by contract, and both the rewrite and the original plan
-    * compute the same rows). Bounded: cleared past 256 entries. Stale
-    * only if the same canonical scan's data changes mid-session — the
-    * same staleness window Catalyst's own relation stat caches have. */
-  private val probeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Double), java.lang.Boolean]()
-
   private def hotKeyDeclines(s: Shape): Boolean = {
     val share = maxKeyShare
-    if (share >= 1.0 || inSampling.get) return false
-    val spark = org.apache.spark.sql.SparkSession.getActiveSession
-      .getOrElse(return false)
-    val memoKey = (s.j.left.semanticHash(), s.j.right.semanticHash(),
-      s.keys.map { case (l, r) => (l.semanticHash(), r.semanticHash()) }.hashCode(),
-      share)
-    val hit = probeMemo.get(memoKey)
-    if (hit != null) return hit.booleanValue()
-    inSampling.set(true)
-    val verdict =
-    try {
-      def sampleKeys(child: LogicalPlan, keys: Seq[Expression]): Seq[Seq[Any]] = {
-        val proj = keys.zipWithIndex.map { case (k, i) => Alias(k, s"__ak_$i")() }
-        spark.sessionState.executePlan(
-            Limit(Literal(HotKeySampleRows), Project(proj, child)))
-          .executedPlan.executeCollect()
-          .map(r => keys.indices.map(i => r.get(i, keys(i).dataType)).toSeq)
-          .toSeq
-      }
-      val all = sampleKeys(s.j.left, s.keys.map(_._1)) ++
-        sampleKeys(s.j.right, s.keys.map(_._2))
-      if (all.size < HotKeyMinSample) false
-      else {
-        val top = all.groupBy(identity).valuesIterator.map(_.size).max
-        val frac = top.toDouble / all.size
-        if (frac > share) {
-          logWarning(f"AsOfJoinRule: declining the rewrite — one join key " +
-            f"holds $frac%.2f of a ${all.size}-row sample (threshold " +
-            f"$share%.2f, spark.graft.join.asofMaxKeyShare): the rewritten " +
-            "window would funnel that key into one task. Use the typed " +
-            "graft.operators.TemporalJoin.asOfKeyed (range-partitioned, " +
-            "skew-proof) or raise the threshold to force the rewrite.")
-          true
-        } else false
-      }
-    } catch {
-      case t: Throwable =>
-        logWarning(s"AsOfJoinRule: hot-key probe failed ($t) — proceeding " +
-          "with the rewrite")
-        false
-    } finally inSampling.set(false)
-    if (probeMemo.size > 256) probeMemo.clear()
-    probeMemo.put(memoKey, verdict)
-    verdict
+    if (share >= 1.0) return false
+    def sampleKeys(child: LogicalPlan, keys: Seq[Expression]): Option[Seq[Seq[Any]]] =
+      Probe.sample(child,
+          keys.zipWithIndex.map { case (k, i) => Alias(k, s"__ak_$i")() },
+          HotKeySampleRows)
+        .map(_.map(r => keys.indices.map(i => r.get(i, keys(i).dataType)).toSeq).toSeq)
+    val all = (for {
+      l <- sampleKeys(s.j.left, s.keys.map(_._1))
+      r <- sampleKeys(s.j.right, s.keys.map(_._2))
+    } yield l ++ r).getOrElse(return false)
+    if (all.size < HotKeyMinSample) return false
+    val top = all.groupBy(identity).valuesIterator.map(_.size).max
+    val frac = top.toDouble / all.size
+    if (frac > share) {
+      logWarning(f"AsOfJoinRule: declining the rewrite — one join key " +
+        f"holds $frac%.2f of a ${all.size}-row sample (threshold " +
+        f"$share%.2f, spark.graft.join.asofMaxKeyShare): the rewritten " +
+        "window would funnel that key into one task. Use the typed " +
+        "graft.operators.TemporalJoin.asOfKeyed (range-partitioned, " +
+        "skew-proof) or raise the threshold to force the rewrite.")
+      true
+    } else false
   }
 
   /** BLAST RADIUS of the session-wide flag: while set, EVERY query in the

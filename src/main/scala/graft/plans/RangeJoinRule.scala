@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType}
+import SpatialJoinRule.broadcastHinted
 
 /**
  * Logical rewrite for SQL interval-overlap range joins — the temporal twin
@@ -97,27 +98,16 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     * median, bounded regardless of input size. */
   private val AutoSampleRows = 1001
 
-  /** Re-entrancy guard: the auto-bucket sampling queries below pass
-    * through the optimizer themselves; a sampled child that CONTAINS
-    * another candidate join must not recursively sample (bounded work at
-    * plan time beats a marginally better inner bucket). */
-  private val inSampling = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = false
-  }
-
   /** Bounded deterministic sample of per-row span = greatest − least of
     * the two bound expressions (well-defined for inverted intervals,
     * like the rewrite's own replication). Null-bounded rows are skipped
     * (they satisfy no inequality and generate nothing). */
-  private def sampleSpans(spark: org.apache.spark.sql.SparkSession,
-                          child: LogicalPlan, lo: Expression,
-                          hi: Expression): Array[Long] = {
+  private def sampleSpans(child: LogicalPlan, lo: Expression,
+                          hi: Expression): Option[Array[Long]] = {
     val span = Subtract(Greatest(Seq(asLong(lo), asLong(hi))),
       Least(Seq(asLong(lo), asLong(hi))))
-    val plan = Limit(Literal(AutoSampleRows),
-      Project(Seq(Alias(span, "__rj_span")()), child))
-    spark.sessionState.executePlan(plan).executedPlan.executeCollect()
-      .filter(!_.isNullAt(0)).map(_.getLong(0))
+    Probe.sample(child, Seq(Alias(span, "__rj_span")()), AutoSampleRows)
+      .map(_.filter(!_.isNullAt(0)).map(_.getLong(0)))
   }
 
   /** The auto-sizing rule (the `autoPlanes` precedent,
@@ -126,62 +116,37 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     * the median keeps replication O(1) for the typical row (the
     * operator API's hand-tuning contract, derived instead of known),
     * and the max/cap floor guarantees no SAMPLED row could trip the
-    * runtime span cap. Declines (None, logged) when either side's
-    * sample is empty — a degenerate input where no bucket is evidently
-    * right; the join then runs its original plan. Sampling cost: two
-    * ≤[[AutoSampleRows]]-row jobs at plan time, opt-in via
+    * runtime span cap. Declines (None) when a side cannot be sampled
+    * (see [[Probe.sample]]) or, logged, when either side's sample is
+    * empty — a degenerate input where no bucket is evidently right; the
+    * join then runs its original plan. Sampling cost: one
+    * ≤[[AutoSampleRows]]-row job per side not yet sampled, opt-in via
     * `timeBucket = -1`. Bucket choice affects REPLICATION only — the
     * exact refine makes any positive bucket correct — so a sampling
     * artifact can cost speed, never rows. */
-  /** Auto-bucket memo (r15, guide §1.2 — compute once): same rationale as
-    * [[AsOfJoinRule]]'s probe memo — the derived bucket is a pure function
-    * of (canonicalized children, bound expressions, cap), and each
-    * planning pass of a repeated statement re-ran both sample jobs.
-    * Bucket choice affects replication only, never rows, so a semantic-
-    * hash collision can cost speed, not correctness. Bounded at 256. */
-  private val bucketMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Long), Option[Long]]()
-
   private def resolveAutoBucket(left: LogicalPlan, right: LogicalPlan,
                                 ls: Expression, le: Expression,
                                 rs: Expression, re: Expression,
                                 cap: Long): Option[Long] = {
-    val spark = org.apache.spark.sql.SparkSession.getActiveSession
-      .getOrElse(return None)
-    val memoKey = (left.semanticHash(), right.semanticHash(),
-      Seq(ls, le, rs, re).map(_.semanticHash()).hashCode(), cap)
-    val hit = bucketMemo.get(memoKey)
-    if (hit != null) return hit
-    val resolved: Option[Long] = {
-    inSampling.set(true)
-    try {
-      val lSpans = sampleSpans(spark, left, ls, le)
-      val rSpans = sampleSpans(spark, right, rs, re)
-      if (lSpans.isEmpty || rSpans.isEmpty) {
-        logWarning("RangeJoinRule: auto bucket declined — a join side " +
-          "sampled no non-null bound rows; running the original plan")
-        return None
-      }
-      def median(a: Array[Long]): Long = { val s = a.sorted; s(s.length / 2) }
-      val med = math.max(math.max(median(lSpans), median(rSpans)), 1L)
-      val maxSpan = math.max(lSpans.max, rSpans.max)
-      val target = math.max(med, maxSpan / cap + 1)
-      val bkt =
-        if (target <= 1L) 1L
-        else java.lang.Long.highestOneBit(target - 1) << 1
-      logInfo(s"RangeJoinRule: auto bucket $bkt (median span $med, max " +
-        s"sampled span $maxSpan over ${lSpans.length}+${rSpans.length} rows)")
-      Some(bkt)
-    } catch {
-      case e: Throwable =>
-        logWarning(s"RangeJoinRule: auto bucket sampling failed ($e) — " +
-          "running the original plan")
-        None
-    } finally inSampling.set(false)
+    val (lSpans, rSpans) = (for {
+      l <- sampleSpans(left, ls, le)
+      r <- sampleSpans(right, rs, re)
+    } yield (l, r)).getOrElse(return None)
+    if (lSpans.isEmpty || rSpans.isEmpty) {
+      logWarning("RangeJoinRule: auto bucket declined — a join side " +
+        "sampled no non-null bound rows; running the original plan")
+      return None
     }
-    if (bucketMemo.size > 256) bucketMemo.clear()
-    bucketMemo.put(memoKey, resolved)
-    resolved
+    def median(a: Array[Long]): Long = { val s = a.sorted; s(s.length / 2) }
+    val med = math.max(math.max(median(lSpans), median(rSpans)), 1L)
+    val maxSpan = math.max(lSpans.max, rSpans.max)
+    val target = math.max(med, maxSpan / cap + 1)
+    val bkt =
+      if (target <= 1L) 1L
+      else java.lang.Long.highestOneBit(target - 1) << 1
+    logInfo(s"RangeJoinRule: auto bucket $bkt (median span $med, max " +
+      s"sampled span $maxSpan over ${lSpans.length}+${rSpans.length} rows)")
+    Some(bkt)
   }
 
   /** Catalyst stat values for integral columns arrive as boxed Int/Long. */
@@ -213,9 +178,6 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       case _ => false
     }
 
-  private def broadcastHinted(hint: JoinHint): Boolean =
-    (hint.leftHint ++ hint.rightHint).exists(_.strategy.contains(BROADCAST))
-
   private def integral(e: Expression): Boolean =
     e.dataType == LongType || e.dataType == IntegerType
 
@@ -238,7 +200,7 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val b = bucket
-    if (b == 0 || b < -1 || inSampling.get) plan
+    if (b == 0 || b < -1) plan
     else plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint) if !broadcastHinted(hint) =>
         val conjuncts = splitConjunctivePredicates(cond)
@@ -328,22 +290,10 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     }
     val cellL = AttributeReference("__tb_l", LongType, nullable = false)()
     val cellR = AttributeReference("__tb_r", LongType, nullable = false)()
-    // spread under-partitioned children before the explode (r15): when one
-    // side broadcasts, the other side's explode+join+refine fuses onto the
-    // raw scan's task count — see SpreadNarrow. The probe must not recurse
-    // into this rule's own sampling (inSampling guard, same as the
-    // auto-bucket probe).
-    val (lIn, rIn) = org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(sp) if !inSampling.get =>
-        inSampling.set(true)
-        try (SpreadNarrow(sp, left), SpreadNarrow(sp, right))
-        finally inSampling.set(false)
-      case _ => (left, right)
-    }
     val genL = Generate(buckets(ls, le), Nil, outer = false,
-      qualifier = None, generatorOutput = Seq(cellL), child = lIn)
+      qualifier = None, generatorOutput = Seq(cellL), child = Probe.spread(left))
     val genR = Generate(buckets(rs, re), Nil, outer = false,
-      qualifier = None, generatorOutput = Seq(cellR), child = rIn)
+      qualifier = None, generatorOutput = Seq(cellR), child = Probe.spread(right))
     val newCond = (EqualTo(cellL, cellR) +:
       IntervalReportBucket(asLong(ls), asLong(rs), bLit, cellL) +:
       conjuncts).reduce(And)

@@ -41,7 +41,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     * envelopes, hit st_cells' cell-count bound that BNLJ doesn't have. It
     * also keeps broadcastJoin an INDEPENDENT differential oracle for the
     * cell join rather than a second copy of it. */
-  private def broadcastHinted(hint: JoinHint): Boolean =
+  private[plans] def broadcastHinted(hint: JoinHint): Boolean =
     (hint.leftHint ++ hint.rightHint).exists(_.strategy.contains(BROADCAST))
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
@@ -89,17 +89,10 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
         val cellL = AttributeReference("__gcell_l", LongType, nullable = false)()
         val cellR = AttributeReference("__gcell_r", LongType, nullable = false)()
-        // spread under-partitioned children before the explode (r15): when
-        // one side broadcasts, the other side's explode+join+refine fuses
-        // onto the raw scan's task count — see SpreadNarrow (no-op for
-        // already-shuffled or wide-enough children).
-        val (lIn, rIn) = org.apache.spark.sql.SparkSession.getActiveSession
-          .map(sp => (SpreadNarrow(sp, left), SpreadNarrow(sp, right)))
-          .getOrElse((left, right))
         val genL = Generate(Explode(STCells(le, cs, rad)), Nil, outer = false,
-          qualifier = None, generatorOutput = Seq(cellL), child = lIn)
+          qualifier = None, generatorOutput = Seq(cellL), child = Probe.spread(left))
         val genR = Generate(Explode(STCells(re, cs, zero)), Nil, outer = false,
-          qualifier = None, generatorOutput = Seq(cellR), child = rIn)
+          qualifier = None, generatorOutput = Seq(cellR), child = Probe.spread(right))
 
         val newCond = (EqualTo(cellL, cellR) +: pred +:
           STRefCell(Seq(le, re, cs, cellL, rad)) +: rest).reduce(And)

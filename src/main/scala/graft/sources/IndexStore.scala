@@ -304,24 +304,28 @@ object IndexStore {
         .orderBy((col("knn_dist") +: tieBreak.map(col)): _*).limit(k)
     }
 
+    // one job per round: the round's ≤ k candidates are collected once,
+    // the row count and k-th distance are read off them, and the
+    // conclusive round's rows are served as a local frame (same schema
+    // and order)
+    val distIdx = rowSchema.length
     var r = cellSize
     var round = 0
-    var result: DataFrame = null
+    var result: Array[Row] = null
     while (result == null && round <= maxRounds) {
-      val cand = candidates(r)
-      val stats = cand.agg(count(lit(1)), max(col("knn_dist"))).collect()(0)
-      val rows = stats.getLong(0)
-      val kth = if (rows == 0) Double.MaxValue else stats.getDouble(1)
+      val cand = candidates(r).collect()
+      val kth =
+        if (cand.isEmpty) Double.MaxValue else cand.map(_.getDouble(distIdx)).max
       // conclusive when the box COVERS the store's whole bbox: every entry
       // is then a candidate. ("All trees were read" is NOT coverage — the
       // box still filters entries inside each read tree.)
       val qEnv = new org.locationtech.jts.geom.Envelope(qx - r, qx + r, qy - r, qy + r)
       val covered = qEnv.covers(new org.locationtech.jts.geom.Envelope(sx0, sx1, sy0, sy1))
-      if ((rows >= k && kth <= r) || covered) result = cand
+      if ((cand.length >= k && kth <= r) || covered) result = cand
       else { r *= 2; round += 1 }
     }
-    if (result == null) result = candidates(r)
-    result
+    if (result == null) result = candidates(r).collect()
+    spark.createDataFrame(result.toSeq.asJava, outSchema)
   }
 
   /**

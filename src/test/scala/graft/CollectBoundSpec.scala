@@ -53,9 +53,11 @@ class CollectBoundSpec extends AnyFunSuite {
       "val ratios = ratioDf.collect()" -> 1,
       "val uni = uniDf.collect().map(r => r.getString(0) -> r.getLong(1)).toMap" -> 1,
     ),
-    // 1-row aggregate (kNN candidate stats per expand round)
+    // kNN expand rounds: each round's candidates are orderBy(...).limit(k),
+    // so ≤ k rows
     "IndexStore.scala" -> Map(
-      "val stats = cand.agg(count(lit(1)), max(col(\"knn_dist\"))).collect()(0)" -> 1,
+      "val cand = candidates(r).collect()" -> 1,
+      "if (result == null) result = candidates(r).collect()" -> 1,
     ),
     // SPARSE occupied-cell histogram: O(occupied cells), never the bbox
     "Partitioners.scala" -> Map(

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -273,6 +274,114 @@ class RangeJoinRuleSpec extends AnyFunSuite {
     } finally {
       spark.sql("DROP TABLE IF EXISTS rj_stats_a")
       spark.sql("DROP TABLE IF EXISTS rj_stats_b")
+    }
+  }
+
+  /** Spark jobs `f` submits on this thread. A listener counts the jobs of
+    * a fresh job group; a marker job in the same group then flushes the
+    * listener bus, which delivers job starts in submission order. */
+  private def jobsIn(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"rj-jobs-${System.nanoTime}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker")
+            marker.countDown()
+          else counted.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try {
+      f
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      counted.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** A single-file parquet table of intervals (one scan partition, so a
+    * side's sample is one job), under a fresh path so no earlier plan
+    * shares its probe memo entries. */
+  private def intervalTable(view: String, cols: Seq[String], seed: Int,
+                            rows: Int): Unit = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val path = java.nio.file.Files.createTempDirectory(s"rj_$view").toString
+    (0 until rows).map { i =>
+      val s = rnd.nextInt(5000).toLong
+      (seed * 1000L + i, s, s + rnd.nextInt(400), rnd.nextInt(1000).toDouble,
+        rnd.nextInt(1000).toDouble)
+    }.toDF("id", "s", "e", "x", "y").coalesce(1)
+      .write.mode("overwrite").parquet(path)
+    // the first cols.size of (id, s, e, x, y), renamed to cols
+    spark.read.parquet(path).selectExpr(
+      Seq("id", "s", "e", "x", "y").zip(cols).map { case (c, n) => s"$c AS $n" }: _*)
+      .createOrReplaceTempView(view)
+  }
+
+  private def rulesOff[T](f: => T): T = {
+    val saved = spark.experimental.extraOptimizations
+    try {
+      spark.experimental.extraOptimizations = Nil
+      f
+    } finally spark.experimental.extraOptimizations = saved
+  }
+
+  test("auto bucket samples each join side once: a changed left side re-samples only itself") {
+    intervalTable("rjps_a", Seq("id_a", "sa", "ea"), 31, 300)
+    intervalTable("rjps_b", Seq("id_b", "sb", "eb"), 32, 300)
+    val sql = "SELECT id_a, id_b FROM rjps_a JOIN rjps_b ON sa <= eb AND sb <= ea"
+    val changedSql = sql + " WHERE id_a % 7 <> 3"
+    withBucket(-1L) {
+      assert(jobsIn(spark.sql(sql).queryExecution.executedPlan) == 2,
+        "a cold join samples both sides")
+      val changed = spark.sql(changedSql)
+      assert(jobsIn(changed.queryExecution.executedPlan) == 1,
+        "only the changed left side is sampled again")
+      assert(plantedBuckets(changed).nonEmpty, "the changed join still rewrites")
+      assert(jobsIn(spark.sql(sql).queryExecution.executedPlan) == 0,
+        "a repeated statement samples nothing")
+      assert(run(changedSql) == rulesOff(run(changedSql)))
+    }
+  }
+
+  test("nested candidate joins three levels deep plan, re-plan from the probe memo, and answer like the rules-off plan") {
+    val cols = (t: String) => Seq(s"id_$t", s"s_$t", s"e_$t", s"x_$t", s"y_$t")
+    Seq("a", "b", "c", "d", "e").zipWithIndex.foreach { case (t, i) =>
+      intervalTable(s"rjn_$t", cols(t), 41 + i, 24)
+    }
+    // top: a range join whose two children each hold a range join; the
+    // right one holds a spatial join one level further down
+    val sql =
+      """SELECT id_a, id_b, id_c, id_d, id_e FROM
+        |  (SELECT id_a, id_b, s_a, e_a FROM rjn_a JOIN rjn_b
+        |     ON s_a <= e_b AND s_b <= e_a) ab
+        |JOIN
+        |  (SELECT id_c, id_d, id_e, s_c, e_c FROM rjn_c JOIN
+        |     (SELECT id_d, id_e, s_d, e_d FROM rjn_d JOIN rjn_e
+        |        ON st_within_distance(st_point(x_d, y_d), st_point(x_e, y_e), 250.0)) de
+        |     ON s_c <= e_d AND s_d <= e_c) cde
+        |ON s_a <= e_c AND s_c <= e_a""".stripMargin
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Long]] =
+      df.collect().map(r => (0 until 5).map(r.getLong)).toSeq.sortBy(_.mkString(","))
+    withBucket(-1L) {
+      val df = spark.sql(sql)
+      df.queryExecution.executedPlan // planning finishes
+      assert(plantedBuckets(df).nonEmpty, "the range joins rewrite")
+      assert(jobsIn(spark.sql(sql).queryExecution.executedPlan) == 0,
+        "re-planning the nested statement hits the probe memo for every side")
+      val want = rulesOff(rows(spark.sql(sql)))
+      assert(want.nonEmpty)
+      assert(rows(df) == want)
     }
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -88,5 +91,34 @@ class SpatialJoinRuleSpec extends AnyFunSuite {
     val a = pairs("SELECT n_nationkey, c_custkey FROM nrect JOIN cpts ON st_contains(n_geo, c_geo)")
     val b = pairs("SELECT n_nationkey, c_custkey FROM nrect JOIN cpts ON st_containedby(c_geo, n_geo)")
     assert(a == b && a.nonEmpty)
+  }
+
+  test("rule path spreads a single-partition side below its Generate and leaves a wide side alone") {
+    val par = spark.sparkContext.defaultParallelism
+    def points(parts: Int, id: String, geo: String) =
+      spark.range(0, 300, 1, parts).selectExpr(s"id AS $id",
+        s"st_point(CAST(id * 7 % 300 AS DOUBLE), CAST(id * 13 % 300 AS DOUBLE)) AS $geo")
+    points(1, "nid", "ngeo").createOrReplaceTempView("sp_narrow")
+    points(par, "wid", "wgeo").createOrReplaceTempView("sp_wide")
+    val sql = "SELECT nid, wid FROM sp_narrow JOIN sp_wide ON st_within_distance(ngeo, wgeo, 12.0)"
+    val df = spark.sql(sql)
+    val plan = df.queryExecution.sparkPlan
+    // RoundRobin exchanges under each side's cell explode, keyed by the
+    // cell column the Generate emits (__gcell_l: the left, narrow side)
+    val roundRobins = plan.collect { case g: GenerateExec =>
+      g.generatorOutput.head.name -> g.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+      }.size
+    }.toMap
+    assert(roundRobins == Map("__gcell_l" -> 1, "__gcell_r" -> 0), plan.toString.take(1500))
+    def keyPairs(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rewritten = keyPairs(df)
+    val saved = spark.experimental.extraOptimizations
+    try {
+      spark.experimental.extraOptimizations = Nil
+      assert(keyPairs(spark.sql(sql)) == rewritten)
+    } finally spark.experimental.extraOptimizations = saved
+    assert(rewritten.nonEmpty)
   }
 }
