@@ -2622,8 +2622,8 @@ object SparkEntry {
         .orderBy(col("id_a"), col("id_b"))
     }),
 
-    // q42 with the bucket DERIVED (bucket = -1): the typed operator's
-    // auto-sizing twin of q245 — the sampled-median rule lands in the
+    // q42 with the bucket DERIVED (bucket = -1): the typed operator runs
+    // q245's sizer and rewrite — the sampled-median rule lands in the
     // same replication class as the hand-chosen 120 s for these uniform
     // 60 s intervals, and the oracle is unchanged because the bucket is
     // a replication-only knob.

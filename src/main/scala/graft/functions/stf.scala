@@ -169,19 +169,24 @@ object GraftFunctions {
   }
 
   /** Idempotently register all st_* functions in the given session, and
-    * activate the spatial-join rewrite rule (SQL joins on bare st_*
-    * predicates plan as cell hash joins instead of BNLJ). */
+    * activate graft's four rewrite rules (SQL joins on bare st_*
+    * predicates plan as cell hash joins instead of BNLJ, and so on). A
+    * rule the session's optimizer already runs — injected through
+    * [[graft.GraftExtensions]], or added by an earlier call — is not
+    * added again: each extra copy would run it in one more batch. */
   def register(spark: SparkSession): Unit = synchronized {
     val reg = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
       if (!reg.functionExists(FunctionIdentifier(name)))
         reg.createOrReplaceTempFunction(name, checked(name, builder), "scala_udf")
     }
-    for (rule <- Seq(graft.plans.SpatialJoinRule, graft.plans.RangeJoinRule,
-        graft.plans.AsOfJoinRule, graft.plans.CellPruneRule))
-      if (!spark.experimental.extraOptimizations.contains(rule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ rule
+    val missing = Seq(graft.plans.SpatialJoinRule, graft.plans.RangeJoinRule,
+      graft.plans.AsOfJoinRule, graft.plans.CellPruneRule)
+      .filterNot(spark.experimental.extraOptimizations.contains)
+    if (missing.nonEmpty) {
+      val held = spark.sessionState.optimizer.batches.flatMap(_.rules).toSet
+      spark.experimental.extraOptimizations ++= missing.filterNot(held)
+    }
   }
 
   /** For `spark.sql.extensions=graft.GraftExtensions`. */

@@ -37,17 +37,14 @@ object Dedup {
    * partition (row-group granularity), which would run the whole kernel
    * single-threaded; the repartition moves only the raw input rows — cheap
    * exactly when it fires. The decision is [[graft.plans.Probe.spreadWidth]]:
-   * exchange-free plans whose leaves sum to fewer partitions than
+   * exchange-free batch plans whose leaves sum to fewer partitions than
    * `defaultParallelism`, inspected without executing anything. Anything
    * with an upstream shuffle already carries `spark.sql.shuffle.partitions`
    * and is left alone; probing such a plan via `df.rdd` would force AQE to
    * materialize every upstream stage just to learn the count.
    */
   private[graft] def spread(df: DataFrame): DataFrame =
-    // a streaming frame cannot be batch-planned (and its micro-batch
-    // partitioning is the source's business) — pass it through untouched
-    if (df.isStreaming) df
-    else Probe.spreadWidth(df.sparkSession, df.queryExecution.analyzed)
+    Probe.spreadWidth(df.sparkSession, df.queryExecution.analyzed)
       .fold(df)(n => df.repartition(n))
 
   /**

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{GeoOps, GraftFunctions, stf}
+import graft.plans.{SpatialJoinRule, rewrittenJoin}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
@@ -36,6 +37,10 @@ object JoinPredicate {
  * and PlainSpatialRDDFunctions.scala:325-348); partition-pair pruning falls
  * out of the hash join automatically, and AQE handles skewed cells.
  *
+ * [[join]] and [[distanceJoin]] write the plain predicate join and hand it
+ * to [[graft.plans.SpatialJoinRule.rewriteJoin]], the one builder of the
+ * cell join, so the operator and the SQL form plan the same join.
+ *
  * The broadcast path (`broadcastJoin`) maps to BroadcastNestedLoopJoin —
  * right for small build sides (reference Plain:285-301).
  */
@@ -49,55 +54,24 @@ object SpatialJoin {
    * Output: left columns ++ right columns (geometry columns included).
    */
   def join(left: DataFrame, right: DataFrame, leftCol: Column, rightCol: Column,
-           pred: JoinPredicate, cellSize: Double): DataFrame = {
-    GraftFunctions.register(left.sparkSession)
-    requireNoCellColumns(left, right)
-    val cs = lit(cellSize)
-    // spread under-partitioned inputs before the cell explode (r15): when
-    // one side broadcasts, the other side's explode+join+refine fuses into
-    // one codegen stage at the raw scan's task count (1-3 tasks at sf1 —
-    // 8c/32c ratio ≈ 1.0, the work was serial). Dedup.spread is a no-op
-    // for already-shuffled or wide-enough inputs, so nothing changes at
-    // production partition counts.
-    val l = Dedup.spread(left).withColumn("__gcell_l", explode(stf.st_cells(leftCol, cs)))
-    val r = Dedup.spread(right).withColumn("__gcell_r", explode(stf.st_cells(rightCol, cs)))
-    l.join(r,
-        l("__gcell_l") === r("__gcell_r") &&
-        pred.apply(leftCol, rightCol) &&
-        stf.st_ref_cell(leftCol, rightCol, cs, l("__gcell_l")))
-      .drop("__gcell_l", "__gcell_r")
-  }
+           pred: JoinPredicate, cellSize: Double): DataFrame =
+    cellJoin(left, right, pred.apply(leftCol, rightCol), cellSize)
 
-  /** Within-distance join: pairs with geometry distance <= maxDist. */
+  /** Within-distance join: pairs with geometry distance <= maxDist. The
+    * cell size is floored at `maxDist`. */
   def distanceJoin(left: DataFrame, right: DataFrame, leftCol: Column, rightCol: Column,
-                   maxDist: Double, cellSize: Double): DataFrame = {
-    GraftFunctions.register(left.sparkSession)
-    requireNoCellColumns(left, right)
-    // floor the cell size at the radius: expanding a tiny cell grid by a
-    // large radius replicates every left row onto ~(2·maxDist/cellSize)²
-    // cells — a quadratic candidate blowup (and past the st_cells bound, a
-    // hard failure). With cell >= radius the expansion ring stays at most
-    // one cell wide in each direction. SpatialJoinRule applies the same
-    // floor on the SQL path.
-    val cs = lit(math.max(cellSize, maxDist))
-    // spread before the explode — same rationale as [[join]] (r15)
-    val l = Dedup.spread(left).withColumn("__gcell_l", explode(stf.st_cells(leftCol, cs, lit(maxDist))))
-    val r = Dedup.spread(right).withColumn("__gcell_r", explode(stf.st_cells(rightCol, cs)))
-    l.join(r,
-        l("__gcell_l") === r("__gcell_r") &&
-        stf.st_within_distance(leftCol, rightCol, lit(maxDist)) &&
-        stf.st_ref_cell(leftCol, rightCol, cs, l("__gcell_l"), lit(maxDist)))
-      .drop("__gcell_l", "__gcell_r")
-  }
+                   maxDist: Double, cellSize: Double): DataFrame =
+    cellJoin(left, right, stf.st_within_distance(leftCol, rightCol, lit(maxDist)), cellSize)
 
-  /** The cell columns are appended then dropped; a pre-existing column of
-    * either name would be silently replaced and lost from the output, so
-    * fail loudly instead (same contract as joinIndexed's __icell guard). */
-  private[graft] def requireNoCellColumns(left: DataFrame, right: DataFrame): Unit =
-    Seq(left, right).foreach(df =>
-      Seq("__gcell_l", "__gcell_r").foreach(c =>
-        require(!df.columns.exists(_.equalsIgnoreCase(c)),
-          s"spatial join: inputs must not contain a column named $c")))
+  /** `left.join(right, cond)` as the cell join at `cellSize` (the plain
+    * join where the rule declines). `cond` holds one st_* predicate between
+    * the sides, plus any other conjuncts. */
+  private[graft] def cellJoin(left: DataFrame, right: DataFrame, cond: Column,
+                              cellSize: Double): DataFrame = {
+    GraftFunctions.register(left.sparkSession)
+    rewrittenJoin(left.join(right, cond))(
+      SpatialJoinRule.rewriteJoin(_, cellSize, left.sparkSession))
+  }
 
   /** Broadcast the (small) right side; Catalyst plans a
     * BroadcastNestedLoopJoin — [[graft.plans.SpatialJoinRule]] explicitly

@@ -1,9 +1,12 @@
 package graft.operators
 
+import graft.plans.{RangeJoinRule, rewrittenJoin}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, LessThanOrEqual}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.locationtech.jts.index.ItemVisitor
 import org.locationtech.jts.index.intervalrtree.SortedPackedIntervalRTree
 
@@ -42,55 +45,41 @@ object TemporalJoin {
     names.foreach(n => require(!df.columns.exists(_.equalsIgnoreCase(n)),
       s"TemporalJoin: input must not contain a column named $n"))
 
-  /** `bucket = -1` ⇒ AUTO: derive the bucket from a bounded deterministic
-    * sample of both sides' interval lengths — next power of two at or
-    * above the larger median span (the operator contract "choose bucket ≈
-    * typical interval length" computed instead of known; the SQL
-    * surface's `timeBucket = -1` twin, see plans/RangeJoinRule). The
-    * bucket affects REPLICATION only — the exact refine makes any
-    * positive bucket correct — so a sampling artifact can cost speed,
-    * never rows. Degenerate inputs (empty, or all-null bounds) fail
-    * loudly: no bucket is evidently right and the caller should pass one. */
-  private def resolveBucket(left: DataFrame, right: DataFrame,
-                            lStart: Column, lEnd: Column,
-                            rStart: Column, rEnd: Column,
-                            bucket: Long): Long = {
-    if (bucket != -1L) return bucket
-    def medianSpan(df: DataFrame, lo: Column, hi: Column): Long = {
-      // bounded collect: ≤ 1001 single-long rows per side (auto-sizing
-      // sample — the autoPlanes precedent; CollectBoundSpec-registered)
-      val spans = df.select((greatest(lo, hi) - least(lo, hi)).cast("long").as("__tb_span"))
-        .filter(col("__tb_span").isNotNull).limit(1001).collect().map(_.getLong(0))
-      require(spans.nonEmpty, "TemporalJoin: bucket = -1 (auto) cannot " +
-        "size from a side with no non-null bounds — pass an explicit bucket")
-      spans.sorted.apply(spans.length / 2)
-    }
-    val med = math.max(math.max(medianSpan(left, lStart, lEnd),
-      medianSpan(right, rStart, rEnd)), 1L)
-    if (med <= 1L) 1L else java.lang.Long.highestOneBit(med - 1) << 1
-  }
-
+  /** Interval-overlap join: `left.join(right, lStart <= rEnd AND rStart
+    * <= lEnd)` as the bucket join of
+    * [[graft.plans.RangeJoinRule.rewriteWith]] (its one builder) at
+    * `bucket`. `bucket = -1` ⇒ AUTO: the rule's own sizer,
+    * [[graft.plans.RangeJoinRule.autoBucket]], picks it from a bounded
+    * sample of both sides' interval lengths; a side it cannot size from
+    * (empty, or all-null bounds) fails loudly — pass a bucket. A row
+    * spanning more than `spark.graft.join.timeBucketMaxSpan` (4096)
+    * buckets raises the rule's runtime span-cap error. */
   def overlaps(left: DataFrame, right: DataFrame,
                lStart: Column, lEnd: Column, rStart: Column, rEnd: Column,
                bucket: Long): DataFrame = {
-    val bucketR = resolveBucket(left, right, lStart, lEnd, rStart, rEnd, bucket)
-    require(bucketR > 0, s"bucket must be positive or -1 (auto), got $bucket")
-    // both names on both sides: the final drop() removes the names from
-    // the JOINED frame, so a user column of either name on either side
-    // would be silently deleted
-    requireFree(left, "__tb_l", "__tb_r"); requireFree(right, "__tb_l", "__tb_r")
-    // spread under-partitioned inputs before the bucket explode: when one
-    // side broadcasts, the other side's explode+join+refine fuses into one
-    // stage at the raw scan's task count
-    val l = Dedup.spread(left).withColumn("__tb_l",
-      explode(sequence(bucketOf(lStart, bucketR), bucketOf(lEnd, bucketR))))
-    val r = Dedup.spread(right).withColumn("__tb_r",
-      explode(sequence(bucketOf(rStart, bucketR), bucketOf(rEnd, bucketR))))
-    l.join(r,
-        l("__tb_l") === r("__tb_r") &&
-        lStart <= rEnd && rStart <= lEnd &&
-        l("__tb_l") === bucketOf(greatest(lStart, rStart), bucketR))
-      .drop("__tb_l", "__tb_r")
+    require(bucket > 0 || bucket == -1L, s"bucket must be positive or -1 (auto), got $bucket")
+    val spark = left.sparkSession
+    rewrittenJoin(left.join(right, lStart <= rEnd && rStart <= lEnd)) { j =>
+      val (ls, le, rs, re) = overlapBounds(j)
+      Some(RangeJoinRule.rewriteWith(spark, j, ls, le, rs, re,
+        if (bucket == -1L) autoBucket(spark, j) else bucket))
+    }
+  }
+
+  /** (lStart, lEnd, rStart, rEnd) read off the analyzed plain overlap join. */
+  private def overlapBounds(j: Join): (Expression, Expression, Expression, Expression) =
+    j.condition match {
+      case Some(And(LessThanOrEqual(ls, re), LessThanOrEqual(rs, le))) => (ls, le, rs, re)
+      case c => throw new IllegalStateException(s"TemporalJoin: not an overlap condition: $c")
+    }
+
+  /** [[graft.plans.RangeJoinRule.autoBucket]] for the plain overlap join `j`. */
+  private def autoBucket(spark: SparkSession, j: Join): Long = {
+    val (ls, le, rs, re) = overlapBounds(j)
+    RangeJoinRule.autoBucket(spark, j, ls, le, rs, re).getOrElse(
+      throw new IllegalArgumentException("TemporalJoin: bucket = -1 (auto) " +
+        "found no bucket for these inputs (a side with no non-null bounds?) " +
+        "— pass an explicit bucket"))
   }
 
   /**
@@ -114,9 +103,11 @@ object TemporalJoin {
   def overlapsIndexed(left: DataFrame, right: DataFrame,
                       lStart: String, lEnd: String, rStart: String, rEnd: String,
                       bucket: Long): DataFrame = {
-    val bucketR = resolveBucket(left, right, col(lStart), col(lEnd),
-      col(rStart), col(rEnd), bucket)
-    require(bucketR > 0, s"bucket must be positive or -1 (auto), got $bucket")
+    require(bucket > 0 || bucket == -1L, s"bucket must be positive or -1 (auto), got $bucket")
+    val bucketR =
+      if (bucket != -1L) bucket
+      else autoBucket(left.sparkSession, left.join(right,
+        col(lStart) <= col(rEnd) && col(rStart) <= col(lEnd)).queryExecution.analyzed.asInstanceOf[Join])
     requireFree(left, "__tb"); requireFree(right, "__tb")
     val l = left.withColumn("__tb",
       explode(sequence(bucketOf(col(lStart), bucketR), bucketOf(col(lEnd), bucketR))))

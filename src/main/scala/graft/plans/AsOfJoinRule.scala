@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Last, MaxBy}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
@@ -126,9 +127,9 @@ object AsOfJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     val share = maxKeyShare
     if (share >= 1.0) return false
     def sampleKeys(child: LogicalPlan, keys: Seq[Expression]): Option[Seq[Seq[Any]]] =
-      Probe.sample(child,
+      SparkSession.getActiveSession.flatMap(Probe.sample(_, child,
           keys.zipWithIndex.map { case (k, i) => Alias(k, s"__ak_$i")() },
-          HotKeySampleRows)
+          HotKeySampleRows))
         .map(_.map(r => keys.indices.map(i => r.get(i, keys(i).dataType)).toSeq).toSeq)
     val all = (for {
       l <- sampleKeys(s.j.left, s.keys.map(_._1))

@@ -3,9 +3,10 @@ package graft.plans
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Literal, NamedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{Limit, LogicalPlan, Project, Repartition}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Generator, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Limit, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.types.LongType
 
 import scala.util.control.NonFatal
 
@@ -22,15 +23,20 @@ import scala.util.control.NonFatal
  * costs speed, never rows.
  *
  *  - [[sample]] collects `Limit(rows, Project(exprs, child))`.
- *  - [[spreadWidth]] / [[spread]]: a child whose physical plan has no
+ *  - [[spreadWidth]] / [[explodeSpread]]: a child whose physical plan has no
  *    exchange and whose leaves sum to fewer partitions than
  *    `defaultParallelism` is repartitioned round-robin to that width;
- *    anything already shuffled or wide enough passes through. Every raw
+ *    anything already shuffled or wide enough passes through, and so
+ *    does a streaming child, which cannot be batch-planned (its
+ *    micro-batch partitioning is the source's business). Every raw
  *    scan of a single-row-group file is one partition, and when a join
  *    broadcasts one side the other side's explode+join+refine fuses onto
  *    that scan's task count. Deciding plans the child physically
  *    (`sparkPlan`, pre-AQE); a leaf's `execute()` builds its RDD lazily,
  *    so no job is submitted.
+ *
+ * Each probe runs against the session it is given: the rules pass the
+ * session whose optimizer runs them, the operators their DataFrame's.
  *
  * Both go through one memo keyed on the canonicalized probe plan (the
  * sampled child plus its expressions and row bound, or the spread
@@ -85,20 +91,21 @@ private[graft] object Probe extends Logging {
   }
 
   /** At most `rows` rows of `exprs` over `child`; None inside another
-    * probe, without an active session, or when the sample fails. */
-  def sample(child: LogicalPlan, exprs: Seq[NamedExpression],
-             rows: Int): Option[Array[InternalRow]] =
-    SparkSession.getActiveSession.flatMap { spark =>
-      val plan = Limit(Literal(rows), Project(exprs, child))
-      memoized[Option[Array[InternalRow]]](spark, isSample = true, plan, None) {
-        Some(spark.sessionState.executePlan(plan).executedPlan.executeCollect())
-      }
+    * probe or when the sample fails. */
+  def sample(spark: SparkSession, child: LogicalPlan, exprs: Seq[NamedExpression],
+             rows: Int): Option[Array[InternalRow]] = {
+    val plan = Limit(Literal(rows), Project(exprs, child))
+    memoized[Option[Array[InternalRow]]](spark, isSample = true, plan, None) {
+      Some(spark.sessionState.executePlan(plan).executedPlan.executeCollect())
     }
+  }
 
-  /** `Some(defaultParallelism)` when `child` is exchange-free with fewer
-    * leaf partitions than that, else None (also inside another probe). */
+  /** `Some(defaultParallelism)` when `child` is a batch plan, exchange-free
+    * with fewer leaf partitions than that, else None (also inside another
+    * probe). */
   def spreadWidth(spark: SparkSession, child: LogicalPlan): Option[Int] =
-    memoized[Option[Int]](spark, isSample = false, child, None) {
+    if (child.isStreaming) None
+    else memoized[Option[Int]](spark, isSample = false, child, None) {
       val par = spark.sparkContext.defaultParallelism
       val phys = spark.sessionState.executePlan(child).sparkPlan
       val leaves = phys.collectLeaves()
@@ -107,9 +114,16 @@ private[graft] object Probe extends Logging {
       else None
     }
 
-  /** `child` under a round-robin `Repartition` when [[spreadWidth]] says
-    * so; the rules' form of the decision. */
-  def spread(child: LogicalPlan): LogicalPlan =
-    SparkSession.getActiveSession.flatMap(spreadWidth(_, child))
+  /** One side of a rule's cell or bucket join: `child`, under a
+    * round-robin `Repartition` when [[spreadWidth]] says so, exploded by
+    * `gen` into one new non-null long column `name` (the Generate's only
+    * output attribute). */
+  def explodeSpread(spark: SparkSession, child: LogicalPlan, gen: Generator,
+                    name: String): Generate = {
+    val spread = spreadWidth(spark, child)
       .fold(child)(Repartition(_, shuffle = true, child))
+    Generate(gen, Nil, outer = false, qualifier = None,
+      generatorOutput = Seq(AttributeReference(name, LongType, nullable = false)()),
+      child = spread)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.functions.{IntervalBucket, IntervalReportBucket}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -10,10 +11,11 @@ import SpatialJoinRule.broadcastHinted
 
 /**
  * Logical rewrite for SQL interval-overlap range joins — the temporal twin
- * of [[SpatialJoinRule]], and the declarative form of
- * [[graft.operators.TemporalJoin.overlaps]] (the bin-based range-join
- * optimization production engines expose for exactly this θ-shape). A
- * pure-SQL
+ * of [[SpatialJoinRule]] (the bin-based range-join optimization
+ * production engines expose for exactly this θ-shape). [[rewriteWith]]
+ * is the one builder of graft's interval bucket join and [[autoBucket]]
+ * its one auto sizer: [[graft.operators.TemporalJoin.overlaps]] runs
+ * both on its plain overlap join. A pure-SQL
  *
  * {{{ SELECT ... FROM l JOIN r ON l.s <= r.e AND r.s <= l.e }}}
  *
@@ -73,9 +75,10 @@ import SpatialJoinRule.broadcastHinted
  * `spark.graft.join.timeBucketMaxSpan` (default 4096 buckets/row) — a
  * row whose span/bucket ratio exceeds the cap raises a loud, actionable
  * error instead of letting sequence() allocate toward the same class of
- * executor OOM. The operator API keeps its own contract (bucket ≈
- * typical interval length ⇒ O(1) replication); the cap only converts
- * the silent failure mode of a mis-configured bucket into a message.
+ * executor OOM. It holds for the operator API too, whose contract is
+ * bucket ≈ typical interval length ⇒ O(1) replication; the cap only
+ * converts the silent failure mode of a mis-configured bucket into a
+ * message.
  */
 object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -102,35 +105,34 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     * the two bound expressions (well-defined for inverted intervals,
     * like the rewrite's own replication). Null-bounded rows are skipped
     * (they satisfy no inequality and generate nothing). */
-  private def sampleSpans(child: LogicalPlan, lo: Expression,
+  private def sampleSpans(spark: SparkSession, child: LogicalPlan, lo: Expression,
                           hi: Expression): Option[Array[Long]] = {
     val span = Subtract(Greatest(Seq(asLong(lo), asLong(hi))),
       Least(Seq(asLong(lo), asLong(hi))))
-    Probe.sample(child, Seq(Alias(span, "__rj_span")()), AutoSampleRows)
+    Probe.sample(spark, child, Seq(Alias(span, "__rj_span")()), AutoSampleRows)
       .map(_.filter(!_.isNullAt(0)).map(_.getLong(0)))
   }
 
-  /** The auto-sizing rule (the `autoPlanes` precedent,
-    * graft.operators.Dedup): bucket = the next power of two at or above
-    * max(median sampled span of either side, max sampled span / cap) —
-    * the median keeps replication O(1) for the typical row (the
-    * operator API's hand-tuning contract, derived instead of known),
+  /** The auto-bucket sizer, for the rule's `timeBucket = -1` and for
+    * [[graft.operators.TemporalJoin]]'s `bucket = -1` (the `autoPlanes`
+    * precedent, graft.operators.Dedup): bucket = the next power of two
+    * at or above max(median sampled span of either side, max sampled
+    * span / cap) — the median keeps replication O(1) for the typical row
+    * (the operator API's hand-tuning contract, derived instead of known),
     * and the max/cap floor guarantees no SAMPLED row could trip the
     * runtime span cap. Declines (None) when a side cannot be sampled
     * (see [[Probe.sample]]) or, logged, when either side's sample is
     * empty — a degenerate input where no bucket is evidently right; the
     * join then runs its original plan. Sampling cost: one
-    * ≤[[AutoSampleRows]]-row job per side not yet sampled, opt-in via
-    * `timeBucket = -1`. Bucket choice affects REPLICATION only — the
-    * exact refine makes any positive bucket correct — so a sampling
-    * artifact can cost speed, never rows. */
-  private def resolveAutoBucket(left: LogicalPlan, right: LogicalPlan,
+    * ≤[[AutoSampleRows]]-row job per side not yet sampled. Bucket choice
+    * affects REPLICATION only — the exact refine makes any positive
+    * bucket correct — so a sampling artifact can cost speed, never rows. */
+  private[graft] def autoBucket(spark: SparkSession, j: Join,
                                 ls: Expression, le: Expression,
-                                rs: Expression, re: Expression,
-                                cap: Long): Option[Long] = {
+                                rs: Expression, re: Expression): Option[Long] = {
     val (lSpans, rSpans) = (for {
-      l <- sampleSpans(left, ls, le)
-      r <- sampleSpans(right, rs, re)
+      l <- sampleSpans(spark, j.left, ls, le)
+      r <- sampleSpans(spark, j.right, rs, re)
     } yield (l, r)).getOrElse(return None)
     if (lSpans.isEmpty || rSpans.isEmpty) {
       logWarning("RangeJoinRule: auto bucket declined — a join side " +
@@ -139,13 +141,13 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     }
     def median(a: Array[Long]): Long = { val s = a.sorted; s(s.length / 2) }
     val med = math.max(math.max(median(lSpans), median(rSpans)), 1L)
-    val maxSpan = math.max(lSpans.max, rSpans.max)
-    val target = math.max(med, maxSpan / cap + 1)
+    val maxSampled = math.max(lSpans.max, rSpans.max)
+    val target = math.max(med, maxSampled / maxSpan + 1)
     val bkt =
       if (target <= 1L) 1L
       else java.lang.Long.highestOneBit(target - 1) << 1
     logInfo(s"RangeJoinRule: auto bucket $bkt (median span $med, max " +
-      s"sampled span $maxSpan over ${lSpans.length}+${rSpans.length} rows)")
+      s"sampled span $maxSampled over ${lSpans.length}+${rSpans.length} rows)")
     Some(bkt)
   }
 
@@ -201,7 +203,7 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val b = bucket
     if (b == 0 || b < -1) plan
-    else plan.transformUp {
+    else SparkSession.getActiveSession.fold(plan) { spark => plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint) if !broadcastHinted(hint) =>
         val conjuncts = splitConjunctivePredicates(cond)
         val alreadyRewritten = conjuncts.exists {
@@ -248,9 +250,9 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         if (eligible.size != 1 || alreadyRewritten) j
         else {
           val (ls, le, rs, re) = eligible.head
-          val cap = maxSpan
+          lazy val cap = maxSpan
           val bRes: Option[Long] =
-            if (b == -1L) resolveAutoBucket(left, right, ls, le, rs, re, cap)
+            if (b == -1L) autoBucket(spark, j, ls, le, rs, re)
             else if (statsProveWide(left, ls, le, b, cap) ||
                      statsProveWide(right, rs, re, b, cap)) {
               logWarning("RangeJoinRule: column stats prove every row " +
@@ -260,16 +262,21 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
                 "use timeBucket=-1 to auto-size)")
               None
             } else Some(b)
-          if (bRes.isEmpty) j else rewriteWith(j, left, right, hint,
-            conjuncts, ls, le, rs, re, bRes.get, cap)
+          bRes.fold(j: LogicalPlan)(rewriteWith(spark, j, ls, le, rs, re, _))
         }
-    }
+    }}
   }
 
-  private def rewriteWith(j: Join, left: LogicalPlan, right: LogicalPlan,
-                          hint: JoinHint, conjuncts: Seq[Expression],
-                          ls: Expression, le: Expression, rs: Expression,
-                          re: Expression, b: Long, cap: Long): LogicalPlan = {
+  /** The bucket join for `j` with bounds `ls`/`le` over its left side and
+    * `rs`/`re` over its right, at bucket `b`: the only builder of graft's
+    * interval bucket join. [[apply]] calls it with the conf or auto
+    * bucket; [[graft.operators.TemporalJoin.overlaps]] with its own, on
+    * its plain overlap join. `spark` plans the spread probes of the two
+    * sides. */
+  private[graft] def rewriteWith(spark: SparkSession, j: Join,
+                                 ls: Expression, le: Expression, rs: Expression,
+                                 re: Expression, b: Long): LogicalPlan = {
+    val cap = maxSpan
     val bLit = Literal(b)
     val tz = Some(conf.sessionLocalTimeZone)
     // runtime span cap: a row exploding more than `cap` buckets
@@ -288,15 +295,12 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         bHi)
       Explode(Sequence(bLo, bHiCapped, None, tz))
     }
-    val cellL = AttributeReference("__tb_l", LongType, nullable = false)()
-    val cellR = AttributeReference("__tb_r", LongType, nullable = false)()
-    val genL = Generate(buckets(ls, le), Nil, outer = false,
-      qualifier = None, generatorOutput = Seq(cellL), child = Probe.spread(left))
-    val genR = Generate(buckets(rs, re), Nil, outer = false,
-      qualifier = None, generatorOutput = Seq(cellR), child = Probe.spread(right))
+    val genL = Probe.explodeSpread(spark, j.left, buckets(ls, le), "__tb_l")
+    val genR = Probe.explodeSpread(spark, j.right, buckets(rs, re), "__tb_r")
+    val (cellL, cellR) = (genL.generatorOutput.head, genR.generatorOutput.head)
     val newCond = (EqualTo(cellL, cellR) +:
       IntervalReportBucket(asLong(ls), asLong(rs), bLit, cellL) +:
-      conjuncts).reduce(And)
-    Project(j.output, Join(genL, genR, Inner, Some(newCond), hint))
+      splitConjunctivePredicates(j.condition.get)).reduce(And)
+    Project(j.output, Join(genL, genR, Inner, Some(newCond), j.hint))
   }
 }

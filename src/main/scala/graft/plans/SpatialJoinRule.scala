@@ -1,11 +1,11 @@
 package graft.plans
 
-import graft.functions.{GeoOps, STCells, STRefCell, STRelate, STWithinDistance}
+import graft.functions.{STCells, STRefCell, STRelate, STWithinDistance}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.LongType
 
 /**
  * Logical rewrite for SQL spatial joins — the Spark-native counterpart of
@@ -28,7 +28,10 @@ import org.apache.spark.sql.types.LongType
  * bare `st_*` join condition whose argument sides resolve unambiguously,
  * so it is idempotent (the rewritten condition is a conjunction).
  *
- * Cell size comes from `spark.graft.join.cellSize` (default 100 units).
+ * [[rewriteJoin]] is the one builder of graft's spatial cell join: the
+ * rule applies it with the cell size from `spark.graft.join.cellSize`
+ * (default 100 units), and [[graft.operators.SpatialJoin]] and the
+ * streaming spatial joins apply it with their own.
  */
 object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -44,15 +47,26 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   private[plans] def broadcastHinted(hint: JoinHint): Boolean =
     (hint.leftHint ++ hint.rightHint).exists(_.strategy.contains(BROADCAST))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), hint) if !broadcastHinted(hint) =>
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    SparkSession.getActiveSession.fold(plan) { spark =>
+      plan.transformUp { case j: Join => rewriteJoin(j, cellSize, spark).getOrElse(j) }
+    }
+
+  /** The cell join for `j` at `cellSize`, or None where the rule declines.
+    * The only builder of graft's spatial cell join: [[apply]] calls it
+    * with the conf cell size, and [[graft.operators.SpatialJoin]] and the
+    * streaming spatial joins with their own, on their plain predicate
+    * join. `spark` plans the spread probes of the two sides. */
+  private[graft] def rewriteJoin(j: Join, cellSize: Double,
+                                 spark: SparkSession): Option[LogicalPlan] = j match {
+    case Join(left, right, Inner, Some(cond), hint) if !broadcastHinted(hint) =>
       // the spatial predicate may be one conjunct among several — extract
       // it, rewrite, and carry the remaining conjuncts along unchanged
       val conjuncts = splitConjunctivePredicates(cond)
       // bind the first rewritable spatial conjunct with its resolved sides;
-      // within-distance joins rewrite too (radius-expanded left cells, the
-      // SpatialJoin.distanceJoin recipe) when the distance folds to a
-      // constant — a per-row distance can't pick a cell radius up front
+      // within-distance joins rewrite too (radius-expanded left cells) when
+      // the distance folds to a constant — a per-row distance can't pick a
+      // cell radius up front
       val found = conjuncts.zipWithIndex.collectFirst(Function.unlift {
         case (p: STRelate, i) if p.deterministic &&
             p.left.references.nonEmpty && p.right.references.nonEmpty =>
@@ -76,28 +90,26 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         case _: STRefCell => true
         case _ => false
       }
-      if (found.isEmpty || alreadyRewritten) j
-      else {
-        val (pred, spatialIdx, le, re, radius) = found.get
+      if (alreadyRewritten) None
+      else found.map { case (pred, spatialIdx, le, re, radius) =>
         val rest = conjuncts.patch(spatialIdx, Nil, 1)
-        // a radius larger than the cell floors the cell size so the expanded
-        // envelope replicates onto a bounded ring (same floor the operator
-        // API applies)
+        // floor the cell size at the radius: expanding a tiny cell grid by
+        // a large radius replicates every left row onto ~(2·radius/cell)²
+        // cells — a quadratic candidate blowup (and past the st_cells
+        // bound, a hard failure). With cell >= radius the expansion ring
+        // stays at most one cell wide in each direction.
         val cs = Literal(math.max(cellSize, radius))
         val rad = Literal(radius)
         val zero = Literal(0.0)
 
-        val cellL = AttributeReference("__gcell_l", LongType, nullable = false)()
-        val cellR = AttributeReference("__gcell_r", LongType, nullable = false)()
-        val genL = Generate(Explode(STCells(le, cs, rad)), Nil, outer = false,
-          qualifier = None, generatorOutput = Seq(cellL), child = Probe.spread(left))
-        val genR = Generate(Explode(STCells(re, cs, zero)), Nil, outer = false,
-          qualifier = None, generatorOutput = Seq(cellR), child = Probe.spread(right))
-
+        val genL = Probe.explodeSpread(spark, left, Explode(STCells(le, cs, rad)), "__gcell_l")
+        val genR = Probe.explodeSpread(spark, right, Explode(STCells(re, cs, zero)), "__gcell_r")
+        val (cellL, cellR) = (genL.generatorOutput.head, genR.generatorOutput.head)
         val newCond = (EqualTo(cellL, cellR) +: pred +:
           STRefCell(Seq(le, re, cs, cellL, rad)) +: rest).reduce(And)
         Project(j.output, Join(genL, genR, Inner, Some(newCond), hint))
       }
+    case _ => None
   }
 
   /** The predicate's two arguments must reference opposite join sides

@@ -2,8 +2,10 @@ package graft.sources
 
 import graft.functions.GeoOps
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.locationtech.jts.geom.Envelope
+
+import scala.jdk.CollectionConverters._
 
 /**
  * Spatially-partitioned storage — the reference's `saveAsStarkTextFile` /
@@ -169,7 +171,9 @@ object CellStore {
    * I/O skipping. Each ring adds one cell-width of guaranteed coverage, so
    * the loop terminates with the exact global kNN.
    *
-   * @return the k nearest stored rows with a `knn_dist` column
+   * @return the k nearest stored rows with a `knn_dist` column, nearest
+   *         first, as a local DataFrame (each ring's ≤ k candidates are
+   *         collected once)
    */
   def knn(spark: SparkSession, path: String, xColName: String, yColName: String,
           qx: Double, qy: Double, k: Int, cellSize: Double,
@@ -196,28 +200,29 @@ object CellStore {
       cx - r <= ext.getInt(0) && cx + r >= ext.getInt(1) &&
       cy - r <= ext.getInt(2) && cy + r >= ext.getInt(3)
 
+    // one job per ring: the ring's ≤ k candidates are collected once, the
+    // row count and k-th distance are read off them, and the conclusive
+    // ring's rows are served as a local frame (same schema and order)
+    val ranked = base.withColumn("knn_dist", dist)
+    val distIdx = ranked.schema.fieldIndex("knn_dist")
     var ring = 0
-    var result: DataFrame = null
+    var result: Array[Row] = null
     while (result == null && ring <= maxRings) {
-      val cand = base.filter(
+      val cand = ranked.filter(
           col("part_cx") >= cx - ring && col("part_cx") <= cx + ring &&
           col("part_cy") >= cy - ring && col("part_cy") <= cy + ring)
-        .withColumn("knn_dist", dist)
-        .orderBy(col("knn_dist")).limit(k)
-      // one action per ring: row count + kth distance together
-      val stats = cand.agg(count(lit(1)), max(col("knn_dist"))).collect()(0)
-      val rows = stats.getLong(0)
-      val kth = if (rows == 0) Double.MaxValue else stats.getDouble(1)
+        .orderBy(col("knn_dist")).limit(k).collect()
+      val kth =
+        if (cand.isEmpty) Double.MaxValue else cand.map(_.getDouble(distIdx)).max
       // distance to the *inner edge* of the first unloaded ring: anything
       // outside the loaded box is at least this far from the query point
       val coverage = ring * cellSize +
         math.min(math.min(qx - cx * cellSize, (cx + 1) * cellSize - qx),
                  math.min(qy - cy * cellSize, (cy + 1) * cellSize - qy))
-      if ((rows >= k && kth <= coverage) || coversAll(ring)) result = cand
+      if ((cand.length >= k && kth <= coverage) || coversAll(ring)) result = cand
       else ring += 1
     }
-    if (result == null)
-      result = base.withColumn("knn_dist", dist).orderBy(col("knn_dist")).limit(k)
-    result
+    if (result == null) result = ranked.orderBy(col("knn_dist")).limit(k).collect()
+    spark.createDataFrame(result.toSeq.asJava, ranked.schema)
   }
 }

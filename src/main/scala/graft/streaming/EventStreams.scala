@@ -90,15 +90,15 @@ object EventStreams {
    * Stream-STREAM spatio-temporal join: both sides are unbounded (e.g.
    * vehicle positions ⋈ incident reports), matched when the spatial
    * predicate holds AND their event times lie within `joinWindow` of each
-   * other. The cell-replicate recipe composes with Spark's stream-stream
-   * inner join: explode-cells is stateless, the equi-join key is the cell
-   * id, and the time-range conjunct plus the two watermarks bound the join
-   * state — rows older than watermark + window are evicted, so state never
-   * grows with stream length (the condition Spark requires to run an
-   * unbounded join at all).
+   * other. The batch cell join ([[graft.operators.SpatialJoin.cellJoin]],
+   * with the time-range conjuncts carried in its condition) composes with
+   * Spark's stream-stream inner join: explode-cells is stateless, the
+   * equi-join key is the cell id, and the time-range conjunct plus the two
+   * watermarks bound the join state — rows older than watermark + window
+   * are evicted, so state never grows with stream length (the condition
+   * Spark requires to run an unbounded join at all).
    *
-   * The reference-cell conjunct dedups pairs exactly as in the batch join;
-   * both time columns must be TimestampType.
+   * Both time columns must be TimestampType.
    */
   def spatialJoinStreamStream(left: DataFrame, right: DataFrame,
                               leftGeo: org.apache.spark.sql.Column,
@@ -108,21 +108,13 @@ object EventStreams {
                               leftTsCol: String, rightTsCol: String,
                               watermark: String = "10 minutes",
                               joinWindow: String = "5 minutes"): DataFrame = {
-    import graft.functions.stf
-    graft.functions.GraftFunctions.register(left.sparkSession)
-    graft.operators.SpatialJoin.requireNoCellColumns(left, right)
-    val cs = lit(cellSize)
     val l = left.withWatermark(leftTsCol, watermark)
-      .withColumn("__gcell_l", explode(stf.st_cells(leftGeo, cs)))
     val r = right.withWatermark(rightTsCol, watermark)
-      .withColumn("__gcell_r", explode(stf.st_cells(rightGeo, cs)))
-    l.join(r,
-        l("__gcell_l") === r("__gcell_r") &&
-        pred.apply(leftGeo, rightGeo) &&
-        stf.st_ref_cell(leftGeo, rightGeo, cs, l("__gcell_l")) &&
+    graft.operators.SpatialJoin.cellJoin(l, r,
+      pred.apply(leftGeo, rightGeo) &&
         r(rightTsCol) >= l(leftTsCol) - expr(s"INTERVAL $joinWindow") &&
-        r(rightTsCol) <= l(leftTsCol) + expr(s"INTERVAL $joinWindow"))
-      .drop("__gcell_l", "__gcell_r")
+        r(rightTsCol) <= l(leftTsCol) + expr(s"INTERVAL $joinWindow"),
+      cellSize)
   }
 
   /** Streaming exact dedup on a content fingerprint — the streaming twin of

@@ -24,114 +24,35 @@ object syntax {
   implicit class SpatialDataFrameOps(private val df: DataFrame) extends AnyVal {
 
     // ---- predicate filters (reference PlainSpatialRDDFunctions:92-109) ----
-    def stIntersects(geo: Column, qry: Column): DataFrame = SpatialOps.intersects(df, geo, qry)
-    def stContains(geo: Column, qry: Column): DataFrame = SpatialOps.contains(df, geo, qry)
     def stContainedBy(geo: Column, qry: Column): DataFrame = SpatialOps.containedBy(df, geo, qry)
-    def stCovers(geo: Column, qry: Column): DataFrame = SpatialOps.covers(df, geo, qry)
-    def stCoveredBy(geo: Column, qry: Column): DataFrame = SpatialOps.coveredBy(df, geo, qry)
-    def stWithinDistance(geo: Column, qry: Column, maxDist: Double): DataFrame =
-      SpatialOps.withinDistance(df, geo, qry, maxDist)
 
     // ---- joins (reference Plain:262-348) ----
     def stJoin(other: DataFrame, geo: Column, otherGeo: Column,
                pred: JoinPredicate, cellSize: Double): DataFrame =
       SpatialJoin.join(df, other, geo, otherGeo, pred, cellSize)
-    def stBroadcastJoin(other: DataFrame, geo: Column, otherGeo: Column,
-                        pred: JoinPredicate): DataFrame =
-      SpatialJoin.broadcastJoin(df, other, geo, otherGeo, pred)
-    def stDistanceJoin(other: DataFrame, geo: Column, otherGeo: Column,
-                       maxDist: Double, cellSize: Double): DataFrame =
-      SpatialJoin.distanceJoin(df, other, geo, otherGeo, maxDist, cellSize)
     def stJoinIndexed(other: DataFrame, geoName: String, otherGeoName: String,
                       pred: JoinPredicate, cellSize: Double,
                       index: String = "rtree"): DataFrame =
       SpatialJoin.joinIndexed(df, other, geoName, otherGeoName, pred, cellSize, index)
-    def stBroadcastJoinIndexed(other: DataFrame, geoName: String, otherGeoName: String,
-                               pred: JoinPredicate, index: String = "rtree"): DataFrame =
-      SpatialJoin.broadcastJoinIndexed(df, other, geoName, otherGeoName, pred, index)
     def stTemporalOverlapJoin(other: DataFrame, start: Column, end: Column,
                               otherStart: Column, otherEnd: Column, bucket: Long): DataFrame =
       TemporalJoin.overlaps(df, other, start, end, otherStart, otherEnd, bucket)
-    def stAsOfJoin(other: DataFrame, idName: String, time: Column, otherTime: Column,
-                   maxLookback: Long, tieBreak: Column): DataFrame =
-      TemporalJoin.asOf(df, other, idName, time, otherTime, maxLookback, tieBreak)
     def stAsOfJoinKeyed(other: DataFrame, idName: String, key: Column, otherKey: Column,
                         time: Column, otherTime: Column, maxLookback: Long,
                         tieBreak: Column): DataFrame =
       TemporalJoin.asOfKeyed(df, other, idName, key, otherKey, time, otherTime,
         maxLookback, tieBreak)
-    def stTemporalOverlapJoinIndexed(other: DataFrame, startName: String, endName: String,
-                                     otherStartName: String, otherEndName: String,
-                                     bucket: Long): DataFrame =
-      TemporalJoin.overlapsIndexed(df, other, startName, endName,
-        otherStartName, otherEndName, bucket)
-
-    // ---- cell-partitioned store (reference saveAsStarkTextFile/textFile) ----
-    def stSaveCells(path: String, x: Column, y: Column, cellSize: Double,
-                    geomCol: Option[String] = None, t: Option[Column] = None,
-                    timeBucket: Long = 0L): Unit =
-      graft.sources.CellStore.save(df, path, x, y, cellSize, geomCol, t, timeBucket)
-
-    // ---- persisted indexes (reference index() + loadIndexed) ----
-    def stSaveIndexed(path: String, geoName: String, cellSize: Double,
-                      index: String = "rtree"): Unit =
-      graft.sources.IndexStore.saveIndexed(df, path, geoName, cellSize, index)
-    def stSaveIntervalStore(path: String, startName: String, endName: String,
-                            bucket: Long): Unit =
-      graft.sources.IntervalStore.save(df, path, startName, endName, bucket)
-    def stIntervalStoreJoin(path: String, startName: String, endName: String): DataFrame =
-      graft.sources.IntervalStore.overlapsJoin(df, path, startName, endName)
-    def stJoinPersisted(indexPath: String, geoName: String,
-                        pred: JoinPredicate): DataFrame =
-      graft.sources.IndexStore.join(df, indexPath, geoName, pred)
-    def stKnnJoinPersisted(indexPath: String, geoName: String, idName: String,
-                           k: Int, tieBreak: String = null): DataFrame =
-      graft.sources.IndexStore.knnJoin(df, indexPath, geoName, idName, k, tieBreak = tieBreak)
-    def stKnnPersisted(indexPath: String, qx: Double, qy: Double, k: Int,
-                       tieBreak: Seq[String] = Nil): DataFrame =
-      graft.sources.IndexStore.knn(df.sparkSession, indexPath, qx, qy, k, tieBreak)
 
     // ---- kNN family (reference Plain:112-252) ----
     def stKnn(geo: Column, qry: Column, k: Int,
               distFn: (Column, Column) => Column =
                 graft.functions.stf.st_centroid_distance): DataFrame =
       KNN.knn(df, geo, qry, k, distFn = distFn)
-    def stKnnJoin(other: DataFrame, geoName: String, otherGeoName: String,
-                  idName: String, k: Int): DataFrame =
-      KNN.knnJoin(df, other, geoName, otherGeoName, idName, k)
 
     // ---- skyline / clustering (reference Plain:361-586) ----
     def stSkyline(xCol: String, yCol: String): DataFrame = Skyline.skyline(df, xCol, yCol)
     def stCluster(id: Column, x: Column, y: Column, eps: Double, minPts: Int): DataFrame =
       DBSCAN.cluster(df, id, x, y, eps, minPts)
-    def stClusterGeom(id: Column, geom: Column, eps: Double, minPts: Int): DataFrame =
-      DBSCAN.clusterGeom(df, id, geom, eps, minPts)
-    def stClusterModel(id: Column, x: Column, y: Column, eps: Double, minPts: Int): DataFrame =
-      DBSCAN.model(df, id, x, y, eps, minPts)
-    def stClusterVec(id: Column, vec: Column, dims: Int, eps: Double,
-                     minPts: Int): DataFrame =
-      DBSCAN.clusterVec(df, id, vec, dims, eps, minPts)
-    def stClusterVecModel(id: Column, vec: Column, dims: Int, eps: Double,
-                          minPts: Int): DataFrame =
-      DBSCAN.modelVec(df, id, vec, dims, eps, minPts)
-    def stClusterVecPredict(model: DataFrame, id: Column, vec: Column,
-                            dims: Int, eps: Double): DataFrame =
-      DBSCAN.predictVec(model, df, id, vec, dims, eps)
-    def stClusterPredict(model: DataFrame, id: Column, x: Column, y: Column,
-                         eps: Double): DataFrame =
-      DBSCAN.predict(model, df, id, x, y, eps)
-    def stKDistHistogram(id: Column, x: Column, y: Column,
-                         bucketWidth: Long, nBuckets: Int, k: Int = 1): DataFrame =
-      DBSCAN.kDistHistogram(df, id, x, y, bucketWidth, nBuckets, k)
-    def stNeighborhoodHistogram(id: Column, x: Column, y: Column, eps: Double,
-                                bucketWidth: Long, nBuckets: Int): DataFrame =
-      DBSCAN.neighborhoodHistogram(df, id, x, y, eps, bucketWidth, nBuckets)
-
-    // ---- partitioning (reference partitioner suite) ----
-    def stGridPartition(geo: Column, cellSize: Double, numPartitions: Int): DataFrame =
-      Partitioners.gridPartition(df, geo, cellSize, numPartitions)
-    def stStrPartition(x: Column, y: Column, tieBreak: Column, numPartitions: Int): DataFrame =
-      Partitioners.strPartition(df, x, y, tieBreak, numPartitions)
 
     // ---- raster (reference RasterRDD) ----
     def stRasterize(x: Column, y: Column, pixelWidth: Double, tileW: Int, tileH: Int): DataFrame =
@@ -139,30 +60,10 @@ object syntax {
     def stRasterFilter(qry: Column, pred: JoinPredicate = JoinPredicate.Intersects,
                        default: Long = 0L): DataFrame =
       Raster.filterGeom(df, qry, pred, default)
-    def stWithValues(vs: Long*): DataFrame = Raster.withValues(df, vs: _*)
     def stBucketHistogram(buckets: Int): DataFrame = Raster.bucketHistogram(df, buckets)
-    def stByteValueHistogram(): DataFrame = Raster.byteValueHistogram(df)
-    def stJoinRaster(other: DataFrame, combine: (Column, Column) => Column): DataFrame =
-      Raster.joinRaster(df, other, combine)
-    def stJoinRasterIntersecting(other: DataFrame, cellSize: Double,
-                                 combine: (Column, Column) => Column): DataFrame =
-      Raster.joinRasterIntersecting(df, other, cellSize, combine)
-
-    // ---- visualization (reference visualize()) ----
-    def stVizBins(x: Column, y: Column, x0: Double, y0: Double, x1: Double, y1: Double,
-                  w: Int, h: Int): DataFrame =
-      Visualize.bins(df, x, y, x0, y0, x1, y1, w, h)
-    def stVizGeomBins(geo: Column, x0: Double, y0: Double, x1: Double, y1: Double,
-                      w: Int, h: Int, fill: Boolean = false, pointSize: Int = 1): DataFrame =
-      Visualize.geomBins(df, geo, x0, y0, x1, y1, w, h, fill, pointSize)
-    def stVizRasterBins(x0: Double, y0: Double, x1: Double, y1: Double,
-                        w: Int, h: Int): DataFrame =
-      Visualize.rasterBins(df, x0, y0, x1, y1, w, h)
 
     // ---- training-data ops ----
     def dedupExact(id: Column, text: Column): DataFrame = Dedup.exact(df, id, text)
-    def nearDupPairs(id: Column, text: Column): DataFrame =
-      Dedup.minhashLshPairs(df, id, text)
     def dedupLines(id: Column, text: Column, sep: String = "\n"): DataFrame =
       Dedup.dedupLines(df, id, text, sep)
     def dropNearDuplicates(id: Column, text: Column): DataFrame =
@@ -189,9 +90,6 @@ object syntax {
     def dropSeenCosine(id: Column, vec: Column, storePath: String,
                        threshold: Double): DataFrame =
       Dedup.dropSeenCosine(df, id, vec, storePath, threshold)
-    def annTopK(queries: DataFrame, id: Column, qid: Column,
-                vec: Column, qvec: Column, k: Int): DataFrame =
-      Similarity.bruteTopK(df, queries, id, qid, vec, qvec, k)
     def assignSplit(id: Column, salt: String, fractions: Seq[(String, Double)]): DataFrame =
       Pipeline.assignSplit(df, id, salt, fractions)
     def capPerGroup(group: Column, order: Column, n: Int): DataFrame =
@@ -346,9 +244,6 @@ object syntax {
                        dim: Int = Classifier.DefaultDim,
                        tauE6: Long = 0L): DataFrame =
       Classifier.gate(df, text, model, dim, tauE6)
-    def classifierScoreFromStore(text: Column, path: String,
-                                 tauE6: Long = 0L): DataFrame =
-      Classifier.scoreFromStore(df, text, path, tauE6)
     def histCounts(group: Column, valueE6: Column): DataFrame =
       Sketches.histCounts(df, group, valueE6)
     def histQuantiles(ps: Seq[Int]): DataFrame =

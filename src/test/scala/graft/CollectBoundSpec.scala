@@ -25,10 +25,12 @@ class CollectBoundSpec extends AnyFunSuite {
       ".collect().map(r => (r.getString(1), r.getString(2))).toSeq" -> 1,
       "merges.orderBy(col(\"merge_rank\")).collect()" -> 2,
     ),
-    // 1-row aggregates (global cell-range stats / kNN candidate stats)
+    // 1-row aggregate (global cell-range stats); kNN rings: each ring's
+    // candidates are orderBy(...).limit(k), so ≤ k rows
     "CellStore.scala" -> Map(
       "min(col(\"part_cy\")), max(col(\"part_cy\"))).collect()(0)" -> 1,
-      "val stats = cand.agg(count(lit(1)), max(col(\"knn_dist\"))).collect()(0)" -> 1,
+      ".orderBy(col(\"knn_dist\")).limit(k).collect()" -> 1,
+      "if (result == null) result = ranked.orderBy(col(\"knn_dist\")).limit(k).collect()" -> 1,
     ),
     // model rows ≤ dim ≤ MaxDim (2^20; 8 MB dense) — collectWeights
     "Classifier.scala" -> Map(
@@ -63,12 +65,9 @@ class CollectBoundSpec extends AnyFunSuite {
     "Partitioners.scala" -> Map(
       ".collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap" -> 1,
     ),
-    // asOf carry-in: per-pid max-right table, ≤ numPartitions rows;
-    // auto-bucket sizing sample: ≤ 1001 single-long span rows per side
-    // (the autoPlanes precedent)
+    // asOf carry-in: per-pid max-right table, ≤ numPartitions rows
     "TemporalJoin.scala" -> Map(
       "val pmRows = pidMax.collect().map(r => r.getInt(0) -> r.get(1)).sortBy(_._1)" -> 1,
-      ".filter(col(\"__tb_span\").isNotNull).limit(1001).collect().map(_.getLong(0))" -> 1,
     ),
     // per-group/per-partition count tables (≤ #groups / #partitions rows)
     // and 1-row totals — the shared prefix-rank kernel's driver glue

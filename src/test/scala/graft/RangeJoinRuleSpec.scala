@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -277,36 +276,8 @@ class RangeJoinRuleSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs `f` submits on this thread. A listener counts the jobs of
-    * a fresh job group; a marker job in the same group then flushes the
-    * listener bus, which delivers job starts in submission order. */
-  private def jobsIn(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"rj-jobs-${System.nanoTime}"
-    val counted = new java.util.concurrent.atomic.AtomicInteger
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "marker")
-            marker.countDown()
-          else counted.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "counted")
-    try {
-      f
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      counted.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Spark jobs `f` submits on this thread. */
+  private def jobsIn(f: => Any): Int = TestJobs.inputRowsPerJob(spark)(f).size
 
   /** A single-file parquet table of intervals (one scan partition, so a
     * side's sample is one job), under a fresh path so no earlier plan
@@ -382,6 +353,38 @@ class RangeJoinRuleSpec extends AnyFunSuite {
       val want = rulesOff(rows(spark.sql(sql)))
       assert(want.nonEmpty)
       assert(rows(df) == want)
+    }
+  }
+
+  test("TemporalJoin.overlaps runs the rule's bucket join: a __tb_l input column joins, auto sizes like the rule") {
+    import graft.operators.TemporalJoin
+    import org.apache.spark.sql.execution.GenerateExec
+    mkViews()
+    val a = spark.table("rja").withColumn("__tb_l", col("id_a") * 2)
+    val b = spark.table("rjb").withColumn("__tb_r", lit(7L))
+    val exp = run("SELECT id_a, id_b FROM rja JOIN rjb ON sa <= eb AND sb <= ea")
+    for (bucket <- Seq(100L, -1L)) {
+      val got = TemporalJoin.overlaps(a, b, col("sa"), col("ea"), col("sb"), col("eb"), bucket)
+      val plan = got.queryExecution.sparkPlan
+      assert(plan.collect { case g: GenerateExec => g }.size == 2, plan.toString.take(1500))
+      assert(got.columns.toSeq == a.columns.toSeq ++ b.columns.toSeq)
+      val rows = got.select("id_a", "id_b", "__tb_l", "__tb_r").collect()
+      assert(rows.forall(r => r.getLong(2) == r.getLong(0) * 2 && r.getLong(3) == 7L))
+      assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet == exp && exp.nonEmpty)
+      assert(rows.length == exp.size, "each overlapping pair exactly once")
+    }
+    // the same auto bucket as the SQL rule's timeBucket = -1
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    def buckets(p: LogicalPlan): Set[Any] = p.flatMap(_.expressions.flatMap(_.collect {
+      case graft.functions.IntervalBucket(_, Literal(v, _)) => v
+    })).toSet
+    withBucket(-1L) {
+      val sqlB = buckets(spark.sql("SELECT * FROM rja JOIN rjb ON sa <= eb AND sb <= ea")
+        .queryExecution.optimizedPlan)
+      val opB = buckets(TemporalJoin.overlaps(spark.table("rja"), spark.table("rjb"),
+        col("sa"), col("ea"), col("sb"), col("eb"), -1L).queryExecution.optimizedPlan)
+      assert(opB.size == 1 && opB == sqlB, s"$opB vs $sqlB")
     }
   }
 }

@@ -211,7 +211,6 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("loader-pushed kNN equals full-scan kNN and reads fewer files") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_store_knn"
     val pts = Tables.customerPts(spark, "/root/testdata/sf0.01")
     CellStore.save(pts, path, col("cx"), col("cy"), 100.0)
@@ -233,13 +232,39 @@ class StorageSpec extends AnyFunSuite {
     assert(prunedIds.map(_._2).toSeq == brute.map(_._2).toSeq) // same distances
     assert(prunedIds.length == k)
 
-    // and it actually pruned: the final plan scanned a small fraction
-    pruned.collect()
-    val scanned = pruned.queryExecution.executedPlan
-      .collect { case f: FileSourceScanExec => f }.head.metrics("numFiles").value
-    val total = CellStore.load(spark, path).inputFiles.length
-    assert(scanned < total / 2, s"scanned $scanned of $total files")
+    // and it actually pruned: the conclusive ring's job (the lookup's last;
+    // the result itself is a local frame) read a small fraction of the
+    // store's rows
+    val readRows = TestJobs.inputRowsPerJob(spark)(CellStore.knn(spark, path, "cx", "cy",
+      qx = 437.0, qy = 291.0, k = k, cellSize = 100.0)).last
+    val total = CellStore.load(spark, path).count()
+    assert(readRows > 0 && readRows < total / 2, s"read $readRows of $total rows")
   }
+
+  test("CellStore.knn settled by its first ring runs one job and serves its rows locally") {
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_store_knn_jobs"
+    val pts = Tables.customerPts(spark, "/root/testdata/sf0.01")
+    CellStore.save(pts, path, col("cx"), col("cy"), 100.0)
+    // a cell centre: the first ring covers 50 units around the query,
+    // more than the 3rd-nearest neighbour's distance here
+    val k = 3
+    var got: org.apache.spark.sql.DataFrame = null
+    // loading the store lists its cell directories, itself a job here
+    val listing = TestJobs.inputRowsPerJob(spark)(CellStore.load(spark, path)).size
+    val jobs = TestJobs.inputRowsPerJob(spark) {
+      got = CellStore.knn(spark, path, "cx", "cy", qx = 450.0, qy = 250.0,
+        k = k, cellSize = 100.0)
+      got.collect()
+    }.size - listing
+    assert(jobs == 1, s"$jobs jobs beyond the $listing of the store listing")
+    val dists = got.select(col("knn_dist")).collect().map(_.getDouble(0)).toSeq
+    val brute = pts.select(sqrt((col("cx") - 450.0) * (col("cx") - 450.0) +
+        (col("cy") - 250.0) * (col("cy") - 250.0)).as("d"))
+      .orderBy(col("d")).limit(k).collect().map(_.getDouble(0)).toSeq
+    assert(dists == brute && dists.last < 50.0, s"$dists vs $brute")
+    assert(got.columns.toSeq == CellStore.load(spark, path).columns.toSeq :+ "knn_dist")
+  }
+
 
   test("TileStore: CSV round trip is the identity; parquet store prunes on the query box") {
     import graft.operators.Raster
