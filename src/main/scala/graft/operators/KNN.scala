@@ -78,18 +78,21 @@ object KNN {
     * the filter is the kNN metric itself (centroid euclid), so the radius
     * bound and the ranking distance can never disagree. `cellSize` is
     * decoupled from `radius` so callers can floor it (large-extent
-    * geometries must not explode past the st_cells guard). */
+    * geometries must not explode past the st_cells guard). Outer on the
+    * left: a left row without any in-radius candidate (a null geometry
+    * included) still appears, with null right columns and distance, so
+    * the round that ranks these pairs also sees every pending row. */
   private def candidates(left: DataFrame, right: DataFrame, leftGeom: String,
                          rightGeom: String, radius: Double, cellSize: Double,
                          distName: String): DataFrame = {
     val cs = lit(cellSize)
-    val l = left.withColumn("__kcell_l", explode(stf.st_cells(col(leftGeom), cs, lit(radius))))
+    val l = left.withColumn("__kcell_l", explode_outer(stf.st_cells(col(leftGeom), cs, lit(radius))))
     val r = right.withColumn("__kcell_r", explode(stf.st_cells(col(rightGeom), cs)))
     val lg = l(leftGeom); val rg = r(rightGeom)
     l.join(r,
         l("__kcell_l") === r("__kcell_r") &&
         stf.st_centroid_distance(lg, rg) <= lit(radius) &&
-        stf.st_ref_cell(lg, rg, cs, l("__kcell_l"), lit(radius)))
+        stf.st_ref_cell(lg, rg, cs, l("__kcell_l"), lit(radius)), "left_outer")
       .drop("__kcell_l", "__kcell_r")
       .withColumn(distName, stf.st_centroid_distance(col(leftGeom), col(rightGeom)))
   }
@@ -99,8 +102,8 @@ object KNN {
    * rows by centroid distance. Output = left.* ++ right.* ++ distName.
    *
    * Algorithm (adaptive expand-radius, both sides arbitrarily large):
-   *  1. one scalar aggregation per side collects bounding box + count —
-   *     the only data that ever reaches the driver;
+   *  1. one scalar aggregation over both sides collects bounding boxes and
+   *     counts — the only data that ever reaches the driver;
    *  2. initial radius r₀ sized so a uniform-density circle holds ~2k right
    *     rows; candidates come from the cell-replicated join at cell = r;
    *  3. a left row with ≥ k candidates within r is *finished* (its true k
@@ -116,9 +119,15 @@ object KNN {
    *     windowed-SQL semantics. `k >= |right|` short-circuits straight to
    *     that round: every right row is in every answer.
    *
-   * Each round is one hash join + one window shuffle over only the pending
-   * rows; per-round outputs are localCheckpoint'd so the lineage (and the
-   * anti-join driving the next round) never recomputes earlier rounds.
+   * Each expand round is one candidate join over only the pending rows,
+   * ranked and capped by [[rankCapped]], and one `localCheckpoint`: the
+   * finished rows and the next round's pending rows (one per unfinished
+   * left row, its left columns) both come from that checkpoint, so no
+   * round recomputes an earlier one. Because the rank filter sits directly
+   * on a rank-only window, Spark keeps at most k candidates per left row
+   * in each partition before the window's shuffle. Past Spark's
+   * `spark.sql.optimizer.windowGroupLimitThreshold` (k > 1,000 by default)
+   * the cap runs after the shuffle instead: slower, same answer.
    *
    * @param leftId  column NAME uniquely identifying a left row (window key;
    *                must not clash with a right column). Ids must be unique
@@ -133,9 +142,6 @@ object KNN {
               tieBreak: String = null): DataFrame = {
     GraftFunctions.register(left.sparkSession)
     require(k > 0, s"k must be positive, got $k")
-    require(!left.columns.exists(_.equalsIgnoreCase("__knn_done_id")) &&
-      !right.columns.exists(_.equalsIgnoreCase("__knn_done_id")),
-      "knnJoin: inputs must not contain a column named __knn_done_id")
     require(leftGeom != rightGeom,
       s"knnJoin: left and right geometry columns must have distinct names " +
       s"(both appear in the output); got '$leftGeom' on both sides")
@@ -153,12 +159,14 @@ object KNN {
     // 25% threshold is a perf heuristic, so the ~5% rsd of the approx
     // distinct count only shifts WHICH borderline inputs collapse, never
     // what any of them return.
-    val (lStats, approxSites) = sideStats(left, leftGeom, withDistinct = true)
+    val (lStats, approxSites, rStats) = sideStats(left, leftGeom, right, rightGeom)
     if (lStats.n >= 4096 && approxSites * 4 < lStats.n * 3) { // > ~25% dups
       val sites = left.select(col(leftGeom)).distinct().localCheckpoint()
       val keyed = sites.withColumn("__knn_site", monotonically_increasing_id())
+      // the distinct sites have the rows' bbox and span, and the core
+      // reads the count only to test for emptiness
       val siteOut = knnJoinCore(keyed, right, leftGeom, rightGeom,
-        "__knn_site", k, distName, tieBreak)
+        "__knn_site", k, distName, tieBreak, lStats, rStats)
       // null-safe expansion: a null left geometry is its own site and
       // inherits whatever the core emits for a null row (collapsed and
       // uncollapsed paths must agree on the edge case)
@@ -167,42 +175,64 @@ object KNN {
         col(leftGeom) <=> col("__knn_sgeo")).drop("__knn_sgeo")
     } else
       knnJoinCore(left, right, leftGeom, rightGeom, leftId, k, distName,
-        tieBreak, leftStats = Some(lStats))
+        tieBreak, lStats, rStats)
   }
 
   /** Per-side scalars for the expand-radius machine: bbox, non-null count,
     * largest single-geometry extent (floors the cell size so huge polygons
-    * stay under the st_cells guard), and optionally an approximate
-    * distinct-geometry count for the collapse gate — all in ONE scalar
-    * aggregation so the gate adds no extra pass over the side. */
+    * stay under the st_cells guard). */
   private case class SideStats(x0: Double, x1: Double, y0: Double, y1: Double,
                                n: Long, span: Double)
 
-  private def sideStats(df: DataFrame, geom: String,
-                        withDistinct: Boolean = false): (SideStats, Long) = {
-    val g = col(geom)
-    val base = Seq(min(stf.st_minx(g)), max(stf.st_maxx(g)),
-      min(stf.st_miny(g)), max(stf.st_maxy(g)), count(g),
-      max(greatest(stf.st_maxx(g) - stf.st_minx(g),
-                   stf.st_maxy(g) - stf.st_miny(g))))
-    val aggs = if (withDistinct) base :+ approx_count_distinct(g) else base
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    if (r.isNullAt(0)) (SideStats(0d, 0d, 0d, 0d, 0L, 0d), 0L)
-    else (SideStats(r.getDouble(0), r.getDouble(1), r.getDouble(2),
-            r.getDouble(3), r.getLong(4), r.getDouble(5)),
-          if (withDistinct) r.getLong(6) else 0L)
+  /** Both sides' [[SideStats]] plus the left side's approximate
+    * distinct-geometry count for the collapse gate, in ONE Spark action:
+    * the two 1-row aggregates are cross-joined and read with one `head()`. */
+  private def sideStats(left: DataFrame, leftGeom: String, right: DataFrame,
+                        rightGeom: String): (SideStats, Long, SideStats) = {
+    def aggs(geom: String) = {
+      val g = col(geom)
+      Seq(min(stf.st_minx(g)), max(stf.st_maxx(g)),
+        min(stf.st_miny(g)), max(stf.st_maxy(g)), count(g),
+        max(greatest(stf.st_maxx(g) - stf.st_minx(g),
+                     stf.st_maxy(g) - stf.st_miny(g))))
+    }
+    val la = aggs(leftGeom) :+ approx_count_distinct(col(leftGeom))
+    val ra = aggs(rightGeom)
+    val r = left.agg(la.head, la.tail: _*)
+      .crossJoin(right.agg(ra.head, ra.tail: _*)).head()
+    def at(i: Int) =
+      if (r.isNullAt(i)) SideStats(0d, 0d, 0d, 0d, 0L, 0d)
+      else SideStats(r.getDouble(i), r.getDouble(i + 1), r.getDouble(i + 2),
+        r.getDouble(i + 3), r.getLong(i + 4), r.getDouble(i + 5))
+    (at(0), r.getLong(6), at(7))
   }
 
-  /** The expand-radius machine behind [[knnJoin]] (see its scaladoc).
-    * `leftStats` carries the scalars [[knnJoin]]'s gate already computed
-    * so the uncollapsed path re-plans no extra action on the left side. */
+  /** One expand round's ranking: `cands` plus `__knn_rn`, the rank of each
+    * candidate within its `leftId` by (distance, nulls last; ties), kept to
+    * at most k per left row, and `__knn_n`, the number of kept candidates
+    * with a distance. `__knn_n >= k` exactly when the left row had k or
+    * more candidates. The rank filter sits directly on a rank-only window
+    * so Spark plans a partial `WindowGroupLimit` below the shuffle, and the
+    * count window reuses that partitioning. Shared by [[knnJoin]] and
+    * [[graft.sources.IndexStore.knnJoin]]. */
+  private[graft] def rankCapped(cands: DataFrame, leftId: String, k: Int,
+                                distName: String, ties: Column): DataFrame = {
+    val part = Window.partitionBy(col(leftId))
+    cands
+      .withColumn("__knn_rn",
+        row_number().over(part.orderBy(col(distName).asc_nulls_last, ties)))
+      .filter(col("__knn_rn") <= k)
+      .withColumn("__knn_n", count(col(distName)).over(part))
+  }
+
+  /** The expand-radius machine behind [[knnJoin]] (see its scaladoc),
+    * given the scalars [[knnJoin]]'s gate already computed. */
   private def knnJoinCore(left: DataFrame, right: DataFrame, leftGeom: String,
                           rightGeom: String, leftId: String, k: Int,
                           distName: String, tieBreak: String,
-                          leftStats: Option[SideStats] = None): DataFrame = {
-    val SideStats(lx0, lx1, ly0, ly1, lCount, lSpan) =
-      leftStats.getOrElse(sideStats(left, leftGeom)._1)
-    val SideStats(rx0, rx1, ry0, ry1, rCount, rSpan) = sideStats(right, rightGeom)._1
+                          lStats: SideStats, rStats: SideStats): DataFrame = {
+    val SideStats(lx0, lx1, ly0, ly1, lCount, lSpan) = lStats
+    val SideStats(rx0, rx1, ry0, ry1, rCount, rSpan) = rStats
     if (lCount == 0L || rCount == 0L)
       return candidates(left.limit(0), right.limit(0), leftGeom, rightGeom, 1.0, 1.0, distName)
 
@@ -239,24 +269,19 @@ object KNN {
         done = if (done == null) out else done.unionByName(out)
         finished = true
       } else {
-        val cands = candidates(pending, right, leftGeom, rightGeom, radius,
-          math.max(radius, csFloor), distName)
-        val part = Window.partitionBy(col(leftId))
-        val out = cands
-          .withColumn("__knn_n", count(lit(1)).over(part))
-          .withColumn("__knn_rn",
-            row_number().over(part.orderBy(col(distName), ties)))
-          .filter(col("__knn_n") >= k && col("__knn_rn") <= k)
-          .drop("__knn_n", "__knn_rn")
-          .localCheckpoint()
+        val ranked = rankCapped(
+          candidates(pending, right, leftGeom, rightGeom, radius,
+            math.max(radius, csFloor), distName),
+          leftId, k, distName, ties).localCheckpoint()
+        val out = ranked.filter(col("__knn_n") >= k).drop("__knn_n", "__knn_rn")
         done = if (done == null) out else done.unionByName(out)
-        // null-safe removal: a null leftId (contract violation, but must
-        // not loop) would never match a plain equi-anti-join and be
-        // re-emitted every round
-        val doneIds = out.select(col(leftId).as("__knn_done_id")).distinct()
-        pending = pending
-          .join(doneIds, col(leftId) <=> col("__knn_done_id"), "left_anti")
-          .localCheckpoint()
+        // one row per unfinished left row (its rank-1 row, which the outer
+        // candidate join guarantees), cut to the leading left columns by
+        // position: a left column may share its name with a right one
+        val pos = ranked.columns.indices.map(i => s"__knn_c$i")
+        pending = ranked.filter(col("__knn_n") < k && col("__knn_rn") === 1)
+          .toDF(pos: _*).select(pos.take(left.columns.length).map(col): _*)
+          .toDF(left.columns: _*)
         if (pending.isEmpty) finished = true
         else radius = math.min(radius * 2.0, maxDist)
       }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.functions.{GeoOps, GraftFunctions, stf}
-import graft.operators.{JoinPredicate, SpatialJoin}
+import graft.operators.{JoinPredicate, KNN, SpatialJoin}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -542,17 +542,17 @@ object IndexStore {
       } else {
         if (!firstRound) bbox = pendingBbox(pending)
         firstRound = false
-        val part = Window.partitionBy(col(leftId))
-        val out = roundCandidates(pending, radius, bbox)
-          .withColumn("__knn_n", count(lit(1)).over(part))
-          .withColumn("__knn_rn",
-            row_number().over(part.orderBy(col(distName), ties)))
-          .filter(col("__knn_n") >= k && col("__knn_rn") <= k)
-          .drop("__knn_n", "__knn_rn")
-          .localCheckpoint()
+        val ranked = KNN.rankCapped(roundCandidates(pending, radius, bbox),
+          leftId, k, distName, ties).localCheckpoint()
+        val settled = ranked.filter(col("__knn_n") >= k)
+        val out = settled.drop("__knn_n", "__knn_rn")
         done = if (done == null) out else done.unionByName(out)
-        // null-safe removal — same contract note as KNN.knnJoin
-        val doneIds = out.select(col(leftId).as("__knn_done_id")).distinct()
+        // null-safe removal: a null leftId (contract violation, but must
+        // not loop) would never match a plain equi-anti-join and be
+        // re-emitted every round. The cogroup emits nothing for a left row
+        // without candidates, so the pending set stays an anti-join.
+        val doneIds = settled.filter(col("__knn_rn") === 1)
+          .select(col(leftId).as("__knn_done_id"))
         pending = pending
           .join(doneIds, col(leftId) <=> col("__knn_done_id"), "left_anti")
           .localCheckpoint()

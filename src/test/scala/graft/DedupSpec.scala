@@ -1105,6 +1105,114 @@ class DedupSpec extends AnyFunSuite {
     assert(got == exp && exp.nonEmpty)
   }
 
+  // A 20×20 unit grid of right points at the origin plus six sparse ones
+  // over a 10,000² plane: queries inside the grid settle in the first
+  // expand round, background queries (no right row within r₀) later.
+  private def knnGridRight(sparse: Boolean) = {
+    import spark.implicits._
+    val grid = (0 until 400).map(i => (i.toLong, s"POINT (${i % 20} ${i / 20})"))
+    val far = if (!sparse) Nil else
+      Seq((10000, 10000), (10000, 0), (0, 10000), (7000, 2000), (3000, 9000), (9500, 6000))
+        .zipWithIndex.map { case ((x, y), i) => (1000L + i, s"POINT ($x $y)") }
+    (grid ++ far).toDF("rid", "wkt")
+      .select(col("rid"), graft.functions.stf.st_geomfromwkt(col("wkt")).as("rgeo"))
+  }
+
+  /** Brute-force kNN join: every (lid, rid) pair ranked by (centroid
+    * distance, rid); same column order as `KNN.knnJoin`'s output. */
+  private def bruteKnn(left: org.apache.spark.sql.DataFrame,
+                       right: org.apache.spark.sql.DataFrame, k: Int) = {
+    import org.apache.spark.sql.expressions.Window
+    left.crossJoin(right)
+      .withColumn("knn_dist",
+        graft.functions.stf.st_centroid_distance(col("lgeo"), col("rgeo")))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col("lid")).orderBy(col("knn_dist"), col("rid"))))
+      .filter(col("__rn") <= k).drop("__rn")
+  }
+
+  test("knnJoin over several expand rounds equals brute-force top-k (null geometry, empty r0, polygon)") {
+    import graft.operators.KNN
+    import spark.implicits._
+    val k = 3
+    val inGrid = (0 until 30).map(i =>
+      (i.toLong, Option(s"POINT (${2.3 + i % 6 * 2.7} ${1.7 + i / 6 * 3.1})")))
+    val left = (inGrid ++ Seq(
+        (100L, Some("POINT (5000 5000)")),
+        (101L, Some("POINT (2500 6000)")),
+        (102L, Some("POLYGON ((2000 2000, 2600 2000, 2600 2400, 2000 2400, 2000 2000))")),
+        (103L, None)))
+      .toDF("lid", "wkt")
+      .select(col("lid"), graft.functions.stf.st_geomfromwkt(col("wkt")).as("lgeo"))
+    val right = knnGridRight(sparse = true)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("lid"), col("rid"), col("knn_dist")).collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          if (r.isNullAt(2)) None else Some(r.getDouble(2)))).sortBy(t => (t._1, t._2)).toSeq
+    val exp = rows(bruteKnn(left, right, k))
+    // r₀ as knnJoin sizes it (about 2k right rows per circle at uniform
+    // density over the right bbox): the grid queries' k-th neighbour lies
+    // inside it, the background ones' far outside, so several rounds run
+    val r0 = math.sqrt(2.0 * k * 10000.0 * 10000.0 / (math.Pi * 406))
+    val kth = exp.collect { case (l, _, Some(d)) => (l, d) }
+      .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
+    assert(kth(0L) < r0 && kth(100L) > 4 * r0 && kth(102L) > 4 * r0)
+    assert(exp.length == 34 * k)
+    assert(rows(KNN.knnJoin(left, right, "lgeo", "rgeo", leftId = "lid", k = k,
+      tieBreak = "rid")) == exp)
+  }
+
+  test("knnJoin settled in one round accepts a left column named like a right column") {
+    import graft.operators.KNN
+    import spark.implicits._
+    val left = Seq((0L, "a", "POINT (5.5 7.25)"), (1L, "b", "POINT (12.3 4.6)"),
+        (2L, "c", "POINT (9.9 15.1)"))
+      .toDF("lid", "tag", "wkt")
+      .select(col("lid"), col("tag"), graft.functions.stf.st_geomfromwkt(col("wkt")).as("lgeo"))
+    val right = knnGridRight(sparse = false)
+      .withColumn("tag", concat(lit("r"), col("rid").cast("string")))
+    // output columns lid, tag, lgeo, rid, rgeo, tag, knn_dist: read by position
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(3), r.getString(5), r.getDouble(6)))
+      .sortBy(t => (t._1, t._3)).toSeq
+    val got = KNN.knnJoin(left, right, "lgeo", "rgeo", leftId = "lid", k = 3, tieBreak = "rid")
+    assert(got.columns.toSeq ==
+      Seq("lid", "tag", "lgeo", "rid", "rgeo", "tag", "knn_dist"))
+    val exp = rows(bruteKnn(left, right, 3))
+    assert(exp.length == 9 && rows(got) == exp)
+  }
+
+  test("knnJoin shuffles at most k candidates per query and left partition") {
+    import graft.operators.KNN
+    val st = graft.functions.stf
+    val k = 5
+    // 100 queries inside a 2,000-point cluster whose right bbox four far
+    // corner points widen, so r₀ covers the whole cluster: each query has
+    // 2,000 in-radius candidates and settles in the first round. The left
+    // side is round-robin partitioned, so the rank window needs a shuffle
+    // (a range-partitioned spark.range left would need none).
+    val left = spark.range(100).repartition(4).select(col("id").as("lid"),
+      st.st_point((col("id") % 10).cast("double") * 4.0 + 1.0,
+        (col("id") / 10).cast("long").cast("double") * 4.0 + 1.0).as("lgeo"))
+      .localCheckpoint()
+    val right = spark.range(2004).select(col("id").as("rid"),
+      when(col("id") < 2000, st.st_point((col("id") % 50).cast("double"),
+          (col("id") / 50).cast("long").cast("double")))
+        .otherwise(st.st_point(
+          when(col("id") % 2 === 0, lit(-5000.0)).otherwise(lit(5000.0)),
+          when(col("id") < 2002, lit(-5000.0)).otherwise(lit(5000.0)))).as("rgeo"))
+      .localCheckpoint()
+    val p = left.rdd.getNumPartitions
+    var n = 0L
+    val written = TestJobs.shuffleRecordsWritten(spark) {
+      n = KNN.knnJoin(left, right, "lgeo", "rgeo", leftId = "lid", k = k,
+        tieBreak = "rid").count()
+    }
+    assert(n == 100L * k)
+    // the 8 are the two stats aggregates' partial rows
+    assert(written <= 100L * k * p + 8, s"$written shuffle records for p = $p")
+  }
+
   test("subwordCount splits on boundaries") {
     import spark.implicits._
     val df = Seq("abc123 def, xyz").toDF("t")
