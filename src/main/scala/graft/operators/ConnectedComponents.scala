@@ -48,8 +48,10 @@ object ConnectedComponents {
     out.result()
   }
 
-  /** @param edges DataFrame with long columns `__a`, `__b` (directed pairs;
-    *              include (x, x) self-loops for isolated nodes)
+  /** @param edges DataFrame with long columns `__a`, `__b`: undirected
+    *              edges, so one direction of each edge is enough (both
+    *              directions give the same components); include (x, x)
+    *              self-loops for isolated nodes
     * @return (`__id`, `__comp`) — component = min node id, one row per node */
   def run(edges: DataFrame, numPartitions: Int = 32): DataFrame = {
     val spark = edges.sparkSession
@@ -64,9 +66,8 @@ object ConnectedComponents {
       .toDF("__id", "__lbl")
 
     // Level 2: per-node label sets -> quotient edges between labels
-    val grouped = localLabels.groupBy(col("__id"))
-      .agg(sort_array(collect_set(col("__lbl"))).as("__ls"))
-      .localCheckpoint()
+    val grouped = graft.plans.measuredCheckpoint(localLabels.groupBy(col("__id"))
+      .agg(sort_array(collect_set(col("__lbl"))).as("__ls")))
     val qEdges = grouped
       .select(explode(transform(col("__ls"), l => struct(element_at(col("__ls"), 1).as("_1"), l.as("_2")))).as("__e"))
       .select(col("__e._1").as("__a"), col("__e._2").as("__b"))
@@ -78,14 +79,19 @@ object ConnectedComponents {
     // cut-off would silently split long components). Collecting through the
     // specialized tuple encoder (16 B/edge, not Row objects) caps driver
     // memory at ~64 MB of edge pairs — a bounded collect, never data-sized.
-    // The size gate is a count over the persisted `grouped` (one cheap
+    // The size gate is a count over the checkpointed `grouped` (one cheap
     // all-parallel pass), NOT limit(bound+1).collect(): CollectLimitExec
     // executes as a sequence of single-task incremental scans — measured as
     // two serialized ~0.6 s one-task stages inside DBSCAN — while
-    // count + collect are both fully parallel jobs over the cache.
-    val QuotientBound = 4000000
+    // count + collect are both fully parallel jobs over the cache. A node
+    // has one local label per partition it was seen in, so the quotient has
+    // at most (nodes × numPartitions) edges; when the measured node count
+    // keeps that under the bound, the count is skipped.
+    val QuotientBound = 4000000L
+    val nodes = grouped.queryExecution.analyzed.stats.rowCount
     val labelComp: DataFrame =
-      if (qEdges.count() <= QuotientBound) {
+      if (nodes.exists(_ * numPartitions <= QuotientBound) ||
+          qEdges.count() <= QuotientBound) {
         unionFind(qEdges.as[(Long, Long)].collect().iterator).toDF("__lbl", "__comp")
       } else {
         import org.apache.spark.graphx.Graph
@@ -93,11 +99,13 @@ object ConnectedComponents {
           .connectedComponents().vertices.toDF("__lbl", "__comp")
       }
 
-    val out = grouped
+    val labeled = grouped
       .select(col("__id"), element_at(col("__ls"), 1).as("__lbl"))
       .join(labelComp, "__lbl")
       .select(col("__id"), col("__comp"))
-      .localCheckpoint() // materialize so the checkpointed prefix can be freed
+    // materialized so the checkpointed prefix can be freed, and measured so
+    // a caller's join plans from the component table's real size
+    val out = graft.plans.measuredCheckpoint(labeled)
     // `out` is materialized — nothing reads `grouped` again, so its
     // node-sized checkpoint blocks are freed NOW instead of lingering for
     // the session lifetime (r15, ADVICE): long sessions cluster many times.

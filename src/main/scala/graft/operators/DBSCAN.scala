@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.plans.measuredCheckpoint
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Distributed DBSCAN over 2-d points — the reference's
@@ -116,11 +116,16 @@ object DBSCAN {
     // take the same min cluster over core neighbor sites. (Spark
     // normalizes NaN/-0.0 identically in groupBy and join keys, so the
     // expansion join matches the collapse exactly.)
-    val sites = collapseSites(pts)
+    // The site table is computed once: the pair join's two sides and the
+    // label join of [[labelPipeline]] all read this one materialized copy
+    // (lazily, each would aggregate the input again), and its measured
+    // size plans those joins.
+    val sites = measuredCheckpoint(collapseSites(pts))
     val nbr = neighborPairsWeighted(sites, eps)
       .select(col("__a"), col("__b"), col("__w"))
     val siteOut = labelPipeline(sites, nbr, minPts,
       keep = Seq(col("__x").as("x"), col("__y").as("y")))
+    Dedup.releaseCheckpoint(sites)
     // null-safe expansion: a null-coordinate point forms its own site,
     // never pairs (null cell keys match nothing), and must still come
     // back as noise — plain === would silently drop it from the output
@@ -157,71 +162,64 @@ object DBSCAN {
       .agg(min(col("__id")).as("__id"), count(lit(1)).as("__w"))
 
   /** The dimension-agnostic back half of DBSCAN: eps-neighbor pairs →
-    * core counts → distributed CC over core-core edges → border rule.
-    * `pts` needs a `__id` column (one row per point); `nbr` every ordered
-    * eps-pair including (a, a), with a `__w` weight column (1 for plain
-    * point pairs; the right side's multiplicity when rows are collapsed
-    * sites — Σ __w is then the exact per-point neighbor count); `keep`
-    * extra pts columns to carry into the output. Returns
-    * (id, keep..., cluster_id, is_core), localCheckpoint'd (see comment
-    * below). */
-  private def labelPipeline(pts: DataFrame, nbrPairs: DataFrame, minPts: Int,
+    * core counts → distributed CC over core-core edges → one label
+    * aggregate. `sites` needs a `__id` column (one row per site, already
+    * materialized by the caller: it is read here and by the caller's pair
+    * join); `nbrPairs` every ordered eps-pair including (a, a), with a
+    * `__w` weight column (1 for plain point pairs; the right side's
+    * multiplicity when rows are collapsed sites — Σ __w is then the exact
+    * per-point neighbor count); `keep` extra `sites` columns to carry into
+    * the output. Returns (id, keep..., cluster_id, is_core), materialized.
+    *
+    * Every table a join reads here (pairs, core flags, components, labels)
+    * is a [[graft.plans.measuredCheckpoint]], computed once and planned
+    * from its measured size: the site-sized side of each join is broadcast
+    * without the pair-sized side being shuffled first.
+    *
+    * The labels come from one aggregate over the pairs joined to the core
+    * components: per site a, n = Σ __w and cid = the minimum component id
+    * over its CORE neighbors b (a non-core b has no component). A core
+    * site's core neighbors all lie in its own component, so cid is its own
+    * cluster; a non-core site gets the minimum over its core neighbors,
+    * which is the border rule; a site without a core neighbor, or without
+    * any pair (null or NaN coordinates never pair), is noise. */
+  private def labelPipeline(sites: DataFrame, nbrPairs: DataFrame, minPts: Int,
                             keep: Seq[Column]): DataFrame = {
-    val spark = pts.sparkSession
-    // EAGER localCheckpoint, not a lazy persist (r15, guide §1.2, verdict
-    // item 1): nbr is consumed by the core aggregate, coreEdges and the
-    // border rule, and the `core` broadcast builds below run as CONCURRENT
-    // driver-side futures — with a lazy persist they race the main job to
-    // a cold cache and EACH recomputes the candidate join from scratch.
-    // The checkpoint runs the join exactly once; everything downstream
-    // reads (a, b, w) pair blocks. Same-JVM A/B at sf0.1 (7 DBSCAN
-    // queries, min of 3): checkpoint 18.97 s total vs lazy persist
-    // 20.65 s vs (lazy nbr + eager core checkpoint) 21.81 s — the
-    // checkpoint won on EVERY query (q216 3.31/3.62/4.08, q230
-    // 3.59/3.86/4.02, q20 1.35/1.49/1.77), so the r14 note that the
-    // racing rebuilds were net faster did not hold up under a controlled
-    // re-measure. At scale the win compounds: the candidate join is the
-    // dominant cost and runs once instead of 2-3x.
-    val nbr = nbrPairs.localCheckpoint()
-    val core = nbr.groupBy(col("__a")).agg(sum(col("__w")).as("__n"))
-      .filter(col("__n") >= minPts).select(col("__a").as("__id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val spark = sites.sparkSession
+    // The pair join runs exactly once; the core sums, the core edges and
+    // the label aggregate all read its (a, b, w) blocks.
+    val nbr = measuredCheckpoint(nbrPairs)
+    val core = measuredCheckpoint(nbr.groupBy(col("__a"))
+      .agg(sum(col("__w")).as("__n"))
+      .filter(col("__n") >= minPts).select(col("__a").as("__id")))
 
-    // deliberately NOT persisted: consumed exactly once (the CC repartition
-    // below) — a persist would write the edge list to storage just to read
-    // it back a single time
-    val coreEdges = nbr
+    // connected components over core-core edges — two-level distributed CC
+    // (per-partition union-find contraction, then the quotient graph; see
+    // ConnectedComponents). This replaces the reference's single-process
+    // transitive closure and labels each component with its min core id —
+    // exactly the deterministic cluster-id contract. Components do not
+    // depend on edge direction, so one direction of each pair (a <= b) is
+    // enough; the (a, a) self-pair keeps an isolated core in the graph.
+    val coreEdges = nbr.filter(col("__a") <= col("__b"))
       .join(core.withColumnRenamed("__id", "__a"), "__a")
       .join(core.withColumnRenamed("__id", "__b"), "__b")
       .select(col("__a"), col("__b"))
-
-    // connected components over core-core edges — two-level distributed CC
-    // (per-partition union-find contraction, then Pregel on the quotient
-    // graph; see ConnectedComponents). This replaces the reference's
-    // driver-side transitive closure and labels each component with its min
-    // core id — exactly the deterministic cluster-id contract. Every core
-    // point appears (nbr includes the (a,a) self-pair).
     val coreClusters = ConnectedComponents
       .run(coreEdges, numPartitions = spark.sparkContext.defaultParallelism)
-      .withColumnRenamed("__comp", "__cid")
-    // border: non-core point with >= 1 core neighbor -> min neighbor cluster
-    val borderClusters = nbr.join(core.withColumnRenamed("__id", "__a"),
-        Seq("__a"), "left_anti") // a is not core
-      .join(coreClusters.select(col("__id").as("__b"), col("__cid")), "__b")
-      .groupBy(col("__a")).agg(min(col("__cid")).as("__cid"))
-      .withColumnRenamed("__a", "__id")
+    val lab = measuredCheckpoint(nbr
+      .join(coreClusters.select(col("__id").as("__b"), col("__comp").as("__cid")),
+        Seq("__b"), "left")
+      .groupBy(col("__a"))
+      .agg(sum(col("__w")).as("__n"), min(col("__cid")).as("__cid")))
 
-    val out = pts
-      .join(coreClusters.withColumnRenamed("__cid", "__c1"), Seq("__id"), "left")
-      .join(borderClusters.withColumnRenamed("__cid", "__c2"), Seq("__id"), "left")
+    val out = measuredCheckpoint(sites
+      .join(lab.withColumnRenamed("__a", "__id"), Seq("__id"), "left")
       .select(col("__id").as("id") +: keep ++: Seq(
-        coalesce(col("__c1"), col("__c2"), lit(-1L)).as("cluster_id"),
-        col("__c1").isNotNull.as("is_core")): _*)
-      // materialize (small: one row per point), then free the large
-      // neighbor/core intermediates so repeated clustering calls don't
-      // accumulate executor storage
-      .localCheckpoint()
-    Dedup.releaseCheckpoint(nbr); core.unpersist()
+        coalesce(col("__cid"), lit(-1L)).as("cluster_id"),
+        coalesce(col("__n") >= minPts, lit(false)).as("is_core")): _*))
+    // `out` is materialized: free the pair-, core- and label-sized blocks
+    // so repeated clustering calls don't accumulate executor storage
+    Seq(nbr, core, coreClusters, lab).foreach(Dedup.releaseCheckpoint)
     out
   }
 
@@ -281,10 +279,13 @@ object DBSCAN {
     // coincident-site collapse, n-dim twin of [[model]]: identical SLICED
     // vectors share eps-neighborhoods, so the 3^d-halo kernel runs on
     // (site, multiplicity) and per-point labels expand back null-safely
-    val (ptsSid, sites) = collapseSitesVecKeyed(pts)
+    val (ptsSid, siteAgg) = collapseSitesVecKeyed(pts)
+    // computed once for the pair join's two sides and the label join
+    val sites = measuredCheckpoint(siteAgg)
     val nbr = vecNeighborPairsWeighted(sites, dims, eps)
     val siteOut = labelPipeline(sites.select(col("__id"), col("__v")), nbr,
       minPts, keep = Seq.empty)
+    Dedup.releaseCheckpoint(sites)
     expandSiteLabels(ptsSid, siteOut)
   }
 
@@ -421,7 +422,10 @@ object DBSCAN {
     val slackEps = eps * (1 + 1e-9) + 1e-12
     val pts = df.select(idCol.cast("long").as("__id"),
       slice(vecCol, 1, dims).as("__v"))
-    val (ptsSid, sites) = collapseSitesVecKeyed(pts)
+    val (ptsSid, siteAgg) = collapseSitesVecKeyed(pts)
+    // computed once for the pivot sample, the pivot distances and the
+    // label join
+    val sites = measuredCheckpoint(siteAgg)
     // Pivot choice only affects candidate VOLUME, never results (the
     // exact refine decides membership) — but it decides whether Voronoi
     // cells are tight. Greedy farthest-point (k-center) on a bounded
@@ -517,6 +521,7 @@ object DBSCAN {
     }
     val siteOut = labelPipeline(sites.select(col("__id"), col("__v")), nbr,
       minPts, keep = Seq.empty)
+    Dedup.releaseCheckpoint(sites)
     expandSiteLabels(ptsSid, siteOut)
   }
 

@@ -260,13 +260,15 @@ object KNN {
     // with cs >= max(radius, span/4000) that is < 4003, safely under 2^13
     val csFloor = math.max(lSpan, rSpan) / 4000.0
 
+    // every round emits the same columns in the same order, so rounds
+    // union by position (a left column may share its name with a right one)
     var pending = left
     var done: DataFrame = null
     var finished = false
     while (!finished) {
       if (radius >= maxDist) {
         val out = finale(pending).localCheckpoint()
-        done = if (done == null) out else done.unionByName(out)
+        done = if (done == null) out else done.union(out)
         finished = true
       } else {
         val ranked = rankCapped(
@@ -274,7 +276,7 @@ object KNN {
             math.max(radius, csFloor), distName),
           leftId, k, distName, ties).localCheckpoint()
         val out = ranked.filter(col("__knn_n") >= k).drop("__knn_n", "__knn_rn")
-        done = if (done == null) out else done.unionByName(out)
+        done = if (done == null) out else done.union(out)
         // one row per unfinished left row (its rank-1 row, which the outer
         // candidate join guarantees), cut to the leading left columns by
         // position: a left column may share its name with a right one

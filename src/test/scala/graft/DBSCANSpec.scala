@@ -499,4 +499,78 @@ class DBSCANSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(h == Set((0L, 0L, 1L), (1L, 2L, 5L)))
   }
+
+  test("label rule hand cases: border takes the lower cluster, null/NaN are noise, a lone core keeps its id") {
+    import spark.implicits._
+    // eps = 2, minPts = 6, integral coordinates: two 3 × 3 grids A (ids
+    // 1-9, x 0..2) and B (ids 11-19, x 5..7) are core and never within eps
+    // of each other; border point 20 at (4, 0) has 5 neighbours (itself,
+    // A's (2, 0), B's (5, 0), (5, 1), (6, 0)), is nearer to B but takes A's
+    // lower cluster id; lone core 50 at (100, 100) has four coincident
+    // pairs of satellites (ids 41-48) at distance 2 that are mutually
+    // farther apart, so it has 9 neighbours and no core neighbour and keeps
+    // its own id while the satellites take it; 60 has a null and 61 a NaN
+    // coordinate, and both are noise.
+    val a = for (i <- 0 until 9) yield (1L + i, Some((i % 3).toDouble), Some((i / 3).toDouble))
+    val b = for (i <- 0 until 9) yield (11L + i, Some(5.0 + i % 3), Some((i / 3).toDouble))
+    val sat = Seq((102.0, 100.0), (98.0, 100.0), (100.0, 102.0), (100.0, 98.0))
+      .zipWithIndex.flatMap { case ((x, y), j) =>
+        Seq(41L + 2 * j, 42L + 2 * j).map(id => (id, Some(x), Some(y))) }
+    val df = (a ++ b ++ sat ++ Seq(
+      (20L, Some(4.0), Some(0.0)), (50L, Some(100.0), Some(100.0)),
+      (60L, None, Some(3.0)), (61L, Some(Double.NaN), Some(3.0)))).toDF("id", "x", "y")
+    val want = (a.map(_._1 -> (1L, true)) ++ b.map(_._1 -> (11L, true)) ++
+      sat.map(_._1 -> (50L, false)) ++ Seq(20L -> (1L, false), 50L -> (50L, true),
+      60L -> (-1L, false), 61L -> (-1L, false))).toMap
+    def labels(m: org.apache.spark.sql.DataFrame) =
+      m.select(col("id"), col("cluster_id"), col("is_core")).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    assert(labels(DBSCAN.model(df, col("id"), col("x"), col("y"), eps = 2.0, minPts = 6)) == want)
+    // the vector kernels: a null coordinate is a null vector
+    val vec = df.select(col("id"), when(col("x").isNull, lit(null))
+      .otherwise(array(col("x").cast("float"), col("y").cast("float"))).as("v"))
+    assert(labels(DBSCAN.modelVec(vec, col("id"), col("v"), dims = 2,
+      eps = 2.0, minPts = 6)) == want)
+    for (p <- Seq(1, 4))
+      assert(labels(DBSCAN.modelVecPivot(vec, col("id"), col("v"), dims = 2,
+        eps = 2.0, minPts = 6, numPivots = p)) == want, s"numPivots = $p")
+  }
+
+  test("model shuffles site-sized tables plus one direction of the core edges") {
+    // a dense 30 × 30 unit grid in one partition: with eps = 5 every point
+    // has at least 26 eps-neighbours (the corners) and the interior 81
+    val side = 30
+    val pts = spark.range(side * side).coalesce(1)
+      .select(col("id"), (col("id") % side).cast("double").as("x"),
+        (col("id") / side).cast("long").cast("double").as("y"))
+      .localCheckpoint()
+    val eps = 5.0
+    val sites = (side * side).toLong
+    val grid = for (i <- 0 until side; j <- 0 until side) yield (i, j)
+    // eps-pairs with a <= b, self pairs included: the core edge list when
+    // every point is core
+    val halfPairs = grid.map { case (i, j) =>
+      grid.count { case (u, v) =>
+        (u * side + v) >= (i * side + j) && (u - i) * (u - i) + (v - j) * (v - j) <= 25 }
+    }.sum.toLong
+    def shuffled(minPts: Int): (Long, Long) = {
+      var cores = 0L
+      val n = TestJobs.shuffleRecordsWritten(spark) {
+        cores = DBSCAN.model(pts, col("id"), col("x"), col("y"), eps, minPts)
+          .filter(col("is_core")).count()
+      }
+      (n, cores)
+    }
+    // minPts above every neighbour count: nothing is core, no edge reaches
+    // the components, and every shuffle left is site-sized
+    val (none, noCores) = shuffled(1000)
+    assert(noCores == 0L)
+    assert(none <= 4 * sites, s"$none shuffle records for $sites sites")
+    // minPts below every neighbour count: everything is core; the
+    // components read each undirected edge once
+    val (all, allCores) = shuffled(20)
+    assert(allCores == sites)
+    assert(all <= 8 * sites + halfPairs,
+      s"$all shuffle records for $sites sites and $halfPairs edges")
+  }
 }

@@ -1182,6 +1182,29 @@ class DedupSpec extends AnyFunSuite {
     assert(exp.length == 9 && rows(got) == exp)
   }
 
+  test("knnJoin over several rounds accepts a left column named like a right column") {
+    import graft.operators.KNN
+    import spark.implicits._
+    // the grid query settles in the first round, the background query (no
+    // right row within r₀) only after several, so the rounds are unioned
+    val left = Seq((0L, "a", "POINT (5.5 7.25)"), (1L, "b", "POINT (5000 5000)"))
+      .toDF("lid", "tag", "wkt")
+      .select(col("lid"), col("tag"), graft.functions.stf.st_geomfromwkt(col("wkt")).as("lgeo"))
+    val right = knnGridRight(sparse = true)
+      .withColumn("tag", concat(lit("r"), col("rid").cast("string")))
+    // output columns lid, tag, lgeo, rid, rgeo, tag, knn_dist: read by position
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(3), r.getString(5), r.getDouble(6)))
+      .sortBy(t => (t._1, t._3)).toSeq
+    val exp = rows(bruteKnn(left, right, 3))
+    val r0 = math.sqrt(2.0 * 3 * 10000.0 * 10000.0 / (math.Pi * 406))
+    assert(exp.length == 6 && exp.filter(_._1 == 1L).forall(_._5 > 4 * r0))
+    val got = KNN.knnJoin(left, right, "lgeo", "rgeo", leftId = "lid", k = 3, tieBreak = "rid")
+    assert(got.columns.toSeq ==
+      Seq("lid", "tag", "lgeo", "rid", "rgeo", "tag", "knn_dist"))
+    assert(rows(got) == exp)
+  }
+
   test("knnJoin shuffles at most k candidates per query and left partition") {
     import graft.operators.KNN
     val st = graft.functions.stf
